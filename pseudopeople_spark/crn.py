@@ -18,11 +18,12 @@ AQE re-planning, and executor count.
 Three implementations, one contract:
 
 * :func:`hash_u01` — JVM-side ``xxhash64`` (whole-stage codegen'd, the
-  production path).
+  production path); :func:`hash_u01_sql` is its Spark SQL text.
 * :func:`portable_u01` / :func:`portable_u01_sql` — a Lehmer double-step
   LCG on an int64 key, expressible identically in Spark SQL *and* ANSI
   SQL (DuckDB). Used by the oracle-checked noise queries so the DuckDB
-  oracle can replay the exact same draws.
+  oracle can replay the exact same draws; :func:`portable_u01_spark_sql`
+  is its Spark SQL text.
 * :func:`splitmix64_u01` — numpy uint64 splitmix64 for per-(row, token)
   draws inside Arrow pandas UDF kernels (token corruption), fully
   vectorized, no per-row Generator objects.
@@ -72,6 +73,20 @@ def hash_u01(key: Column | str, seed: int | str, decision: str) -> Column:
     return F.pmod(h, F.lit(2**40)).cast("double") / F.lit(_TWO40)
 
 
+def hash_u01_sql(key_sql: str, seed: int | str, decision: str) -> str:
+    """Spark SQL text of :func:`hash_u01` — the same xxhash64 over the
+    same folded salt and key, the same low-40-bit double, so a plan
+    built from text draws bit-identical values. Building the noise plan
+    from text costs one JVM call per projected column instead of one
+    Py4J round trip per expression node (see noise.noise_dataset).
+    Literals carry explicit types: a bare ``0.5`` would parse as a
+    DECIMAL."""
+    return (
+        f"(CAST(pmod(xxhash64(CAST({fold_salt64(seed, decision)} AS BIGINT), {key_sql}), "
+        f"{2**40}L) AS DOUBLE) / {_TWO40!r}D)"
+    )
+
+
 def _mix_decision(seed: int, decision: str) -> int:
     """Fold (seed, decision) into a small positive int64 constant."""
     acc = int(seed) % _MINSTD_M
@@ -103,6 +118,33 @@ def portable_u01_sql(key_expr: str, seed: int, decision: str) -> str:
     x1 = f"((({key_expr}) % {_MINSTD_M}) * {_MINSTD_A} + {d}) % {_MINSTD_M}"
     x2 = f"(({x1}) * {_MINSTD_A}) % {_MINSTD_M}"
     return f"(CAST({x2} AS DOUBLE) / {_MINSTD_M}.0)"
+
+
+def portable_u01_spark_sql(key_sql: str, seed: int, decision: str) -> str:
+    """Spark SQL text of :func:`portable_u01` (``pmod`` over the key cast
+    to BIGINT, exactly as the Column form builds it). The DuckDB oracle
+    keeps its own text, :func:`portable_u01_sql`."""
+    d = _mix_decision(seed, decision)
+    x0 = f"pmod(CAST({key_sql} AS BIGINT), {_MINSTD_M})"
+    x1 = f"pmod({x0} * {_MINSTD_A} + {d}, {_MINSTD_M})"
+    x2 = f"pmod({x1} * {_MINSTD_A}, {_MINSTD_M})"
+    return f"(CAST({x2} AS DOUBLE) / {float(_MINSTD_M)!r}D)"
+
+
+# Each Column draw factory's SQL-text twin. The noise operators build
+# their expressions as text and take either form of ``u01``.
+_SQL_TWINS = {hash_u01: hash_u01_sql, portable_u01: portable_u01_spark_sql}
+
+
+def u01_sql(u01):
+    """The SQL-text draw factory for ``u01`` (a Column factory above or
+    already a text factory)."""
+    if u01 in _SQL_TWINS.values():
+        return u01
+    try:
+        return _SQL_TWINS[u01]
+    except KeyError:
+        raise TypeError(f"no SQL-text twin for draw factory {u01!r}") from None
 
 
 def portable_u01_py(key: int, seed: int, decision: str) -> float:

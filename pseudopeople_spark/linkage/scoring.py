@@ -475,6 +475,11 @@ PROF: "dict[str, float]" = {}
 # free. Above the gate the parquet path is unchanged (the 745k-2.5M
 # record scaling runs, and the only 100 TB-viable shape).
 SMALL_LOOKUP_MAX_ROWS = 150_000
+# ... and only while the collected Arrow table is at most this many
+# bytes: the row gate alone lets wide attach columns put far more than
+# ~4 MB on the driver and into every task closure. A table over the
+# byte gate is dropped and takes the parquet path.
+SMALL_LOOKUP_MAX_BYTES = 32 * 1024 * 1024
 
 
 class ArrowIpcLookup:
@@ -569,12 +574,16 @@ def score_pairs_fused(
     if _LIVE_REC_DIR is not None:
         shutil.rmtree(_LIVE_REC_DIR, ignore_errors=True)
         _LIVE_REC_DIR = None
+    path = None
     if n_records is not None and n_records <= SMALL_LOOKUP_MAX_ROWS:
         # small-records path: no scratch write, no per-worker file read
         _t0 = _time.time()
-        path = ArrowIpcLookup(records.select(id_col, *attach).toArrow())
+        table = records.select(id_col, *attach).toArrow()
+        if table.nbytes <= SMALL_LOOKUP_MAX_BYTES:
+            path = ArrowIpcLookup(table)
+        del table
         PROF["scoring.lookup_ipc"] = round(_time.time() - _t0, 2)
-    else:
+    if path is None:
         base = os.environ.get("PP_FUSED_LOOKUP_DIR") or tempfile.gettempdir()
         path = os.path.join(base, f"pp_fused_rec_{uuid.uuid4().hex}")
         _t0 = _time.time()

@@ -4,10 +4,19 @@ reference's fixed declaration order (reference ``noise_dataset``,
 ``tests/unit/test_noise_form.py:111-203``).
 
 The whole pipeline composes into ONE Spark plan: row noise = hash
-filters (+ one join for guardian duplication), column noise = a chain
-of ``when(mask, noised).otherwise(col)`` projections — Catalyst
-collapses the projection chain into a single whole-stage-codegen'd map,
-so N noise operators cost one pass over the data regardless of N.
+filters (+ one join for guardian duplication), column noise = a few
+projection rounds of ``CASE WHEN mask THEN noised ELSE col END`` —
+Catalyst fuses them into a single whole-stage-codegen'd map, so N noise
+operators cost one pass over the data regardless of N.
+
+The plan is built as SQL text in pure Python (``column_noise.*_sql``,
+``crn.hash_u01_sql``): round k hands Spark one ``F.expr`` per column
+for the k-th operator of every column and applies them with ONE
+``withColumns``. JVM calls therefore scale with the number of columns,
+not with the number of expression nodes — the Column-API build made
+~31k Py4J round trips for one census plan (each ``F.*`` call also pays
+PySpark's call-site capture) and cost more than a warm evaluation of
+200k rows.
 """
 
 from __future__ import annotations
@@ -22,8 +31,12 @@ from pseudopeople_spark.operators import assets
 from pseudopeople_spark.operators import column_noise as cn
 from pseudopeople_spark.operators import row_noise as rn
 from pseudopeople_spark.operators.kernels import apply_token_noise_all_columns
+from pseudopeople_spark.operators.sqltext import ident, string
 
 OVERSAMPLED_DATASETS = {"american_community_survey", "current_population_survey"}
+# column-noise builders that cast back to the column's type (they take
+# ``dtype``)
+_TYPED = (cn.leave_blank_sql, cn.copy_from_household_member_sql, cn.misreport_age_sql)
 
 
 def noise_dataset(
@@ -74,8 +87,13 @@ def noise_dataset(
     # Computed AFTER row noise so guardian-duplicated rows (new ids) get
     # their own base key. Draws stay keyed only by record identity:
     # partition/executor invariance is unchanged.
+    # Birthday collisions: two distinct ids share a 64-bit key with
+    # probability ~n^2/2^65 over n rows (~3e-8 at 1M rows, ~3e-2 at
+    # 1e9), and two colliding records draw every column-noise value
+    # identically for the whole run. Accepted at the scales this
+    # package runs; mix a second salt in before claiming larger ones.
     crn_key = "__crn64"
-    df = df.withColumn(crn_key, F.xxhash64(F.col(key_col)))
+    df = df.withColumn(crn_key, F.expr(f"xxhash64({ident(key_col)})"))
 
     # --- eligibility-scaling proportions (reference noise_scaling.py:
     # 26-45): ONE aggregate over the row-noised data computes every
@@ -87,48 +105,59 @@ def noise_dataset(
     # Streaming plans cannot host an unwatermarked global aggregate, so
     # streams apply p to eligible cells directly (documented,
     # conservative).
+    present = set(df.columns)
     prop_aggs = []
     prop_cols: "dict[tuple[str, str], str]" = {}
     if scale_by_eligibility and not df.isStreaming:
-        nick_names = list(assets.NICKNAMES)
+        # one SQL IN over the 1,080 table keys (an InSet after
+        # optimization) — same eligibility as the broadcast join
+        nick_names = ", ".join(string(n) for n in assets.NICKNAMES)
         for col in spec.columns:
             c_cfg = col_cfg.get(col.name, {})
-            if col.name not in df.columns:
+            if col.name not in present:
                 continue
-            notna = F.col(col.name).isNotNull() & (F.col(col.name).cast("string") != "")
+            c = ident(col.name)
+            notna = f"({c} IS NOT NULL AND CAST({c} AS STRING) != '')"
             if (
                 D.COPY_FROM_HOUSEHOLD_MEMBER in c_cfg
                 and c_cfg[D.COPY_FROM_HOUSEHOLD_MEMBER].get("cell_probability", 0.0) > 0
-                and col.copy_column and col.copy_column in df.columns
+                and col.copy_column and col.copy_column in present
             ):
                 tag = f"__prop_copy_{col.name}"
-                prop_aggs.append(
-                    cn.eligibility_proportion_expr(notna & F.col(col.copy_column).isNotNull(), notna, tag)
-                )
+                prop_aggs.append(cn.eligibility_proportion_expr(
+                    f"({notna} AND {ident(col.copy_column)} IS NOT NULL)", notna, tag
+                ))
                 prop_cols[(col.name, D.COPY_FROM_HOUSEHOLD_MEMBER)] = tag
             if (
                 D.USE_NICKNAME in c_cfg
                 and c_cfg[D.USE_NICKNAME].get("cell_probability", 0.0) > 0
             ):
                 tag = f"__prop_nick_{col.name}"
-                # isin over the 1,080 table keys compiles to an InSet —
-                # same eligibility as the broadcast join, no plan growth
-                prop_aggs.append(
-                    cn.eligibility_proportion_expr(notna & F.col(col.name).isin(nick_names), notna, tag)
-                )
+                prop_aggs.append(cn.eligibility_proportion_expr(f"({notna} AND {c} IN ({nick_names}))", notna, tag))
                 prop_cols[(col.name, D.USE_NICKNAME)] = tag
     if prop_aggs:
         df = df.crossJoin(F.broadcast(df.agg(*prop_aggs)))
 
-    # --- column noise, declaration order per column. Token noise
-    # (phonetic/OCR/typos) is collected across ALL columns and applied
-    # through ONE pandas UDF at the end — token ops are the last ops in
-    # the per-column order and are column-local, so batching them after
-    # the built-in ops is semantics-preserving and costs a single Arrow
-    # crossing for the whole dataset.
+    # --- column noise. Each column's built-in operators, in declaration
+    # order, become SQL-text builders (column_noise ``*_sql``); round k
+    # applies the k-th operator of EVERY column through ONE withColumns
+    # of one F.expr per column. Operators on different columns commute
+    # (each reads only its own column, the key, and never-noised shadow
+    # / proportion / join columns), so the rounds reproduce the
+    # declaration-order plan value for value, while the plan build makes
+    # O(columns) JVM calls. Catalyst fuses the rounds' projections into
+    # one whole-stage-codegen'd map, as it did the per-operator chain.
+    #
+    # Token noise (phonetic/OCR/typos) is collected across ALL columns
+    # and applied through ONE pandas UDF at the end — token ops are the
+    # last ops in the per-column order and are column-local, so batching
+    # them after the built-in ops is semantics-preserving and costs a
+    # single Arrow crossing for the whole dataset.
+    rounds: "list[dict[str, tuple]]" = []
     all_token_plans: "list[tuple[str, list]]" = []
     for col in spec.columns:
         c_cfg = col_cfg.get(col.name, {})
+        ops = []
         token_plan = []
         for nt in D.COLUMN_NOISE_ORDER:
             if nt not in col.noise_types or nt not in c_cfg:
@@ -138,54 +167,62 @@ def noise_dataset(
             if p <= 0:
                 continue
             tp = params.get("token_probability", 0.1)
+            kw = dict(p=p, seed=seed)
             if nt == D.LEAVE_BLANK:
-                df = cn.leave_blank(df, col.name, crn_key, p=p, seed=seed)
+                ops.append((cn.leave_blank_sql, kw))
             elif nt == D.CHOOSE_WRONG_OPTION:
                 # draw universe: the asset table (reference
                 # incorrect_select_options.csv order) — col.options is
                 # only a fallback for columns the reference CSV lacks
                 opts = assets.select_options_for(col.name) or col.options
-                df = cn.choose_wrong_option(df, col.name, crn_key, options=opts, p=p, seed=seed)
+                ops.append((cn.choose_wrong_option_sql, dict(kw, options=opts)))
             elif nt == D.COPY_FROM_HOUSEHOLD_MEMBER:
-                if col.copy_column and col.copy_column in df.columns:
-                    df = cn.copy_from_household_member(
-                        df, col.name, crn_key, col.copy_column, p=p, seed=seed,
-                        proportion_col=prop_cols.get((col.name, nt)),
-                    )
+                if col.copy_column and col.copy_column in present:
+                    ops.append((cn.copy_from_household_member_sql, dict(
+                        kw, copy_column=col.copy_column, proportion_col=prop_cols.get((col.name, nt)),
+                    )))
             elif nt == D.SWAP_MONTH_AND_DAY:
-                df = cn.swap_month_and_day(df, col.name, crn_key, date_format=spec.date_format, p=p, seed=seed)
+                ops.append((cn.swap_month_and_day_sql, dict(kw, date_format=spec.date_format)))
             elif nt == D.WRITE_WRONG_ZIPCODE_DIGITS:
-                df = cn.write_wrong_zipcode_digits(
-                    df, col.name, crn_key, p=p,
-                    digit_probabilities=params.get("digit_probabilities", [0.04, 0.04, 0.2, 0.36, 0.36]),
-                    seed=seed,
-                )
+                ops.append((cn.write_wrong_zipcode_digits_sql, dict(
+                    kw, digit_probabilities=params.get("digit_probabilities", [0.04, 0.04, 0.2, 0.36, 0.36]),
+                )))
             elif nt == D.MISREPORT_AGE:
-                df = cn.misreport_age(
-                    df, col.name, crn_key, p=p,
-                    age_differences=params.get("possible_age_differences"), seed=seed,
-                )
+                ops.append((cn.misreport_age_sql, dict(kw, age_differences=params.get("possible_age_differences"))))
             elif nt == D.WRITE_WRONG_DIGITS:
-                df = cn.write_wrong_digits(df, col.name, crn_key, p=p, token_probability=tp, seed=seed)
+                ops.append((cn.write_wrong_digits_sql, dict(kw, token_probability=tp)))
             elif nt == D.USE_NICKNAME:
-                df = cn.use_nickname(
-                    df, col.name, crn_key, assets.NICKNAMES, p=p, seed=seed,
-                    proportion_col=prop_cols.get((col.name, nt)),
-                )
+                ops.append((cn.use_nickname_sql, dict(kw, proportion_col=prop_cols.get((col.name, nt)))))
             elif nt == D.USE_FAKE_NAME:
                 fakes = assets.FAKE_FIRST_NAMES if "first" in col.name or "middle" in col.name else assets.FAKE_LAST_NAMES
-                df = cn.use_fake_name(df, col.name, crn_key, fakes, p=p, seed=seed)
+                ops.append((cn.use_fake_name_sql, dict(kw, fake_names=fakes)))
             elif nt == D.MAKE_PHONETIC_ERRORS:
                 token_plan.append(("make_phonetic_errors", assets.PHONETIC_VARIANTS, p, tp))
             elif nt == D.MAKE_OCR_ERRORS:
                 token_plan.append(("make_ocr_errors", assets.OCR_ERRORS, p, tp))
             elif nt == D.MAKE_TYPOS:
                 token_plan.append(("make_typos", assets.QWERTY_NEIGHBORS, p, tp))
+        for k, op in enumerate(ops):
+            if k == len(rounds):
+                rounds.append({})
+            rounds[k][col.name] = op
         if token_plan:
             all_token_plans.append((col.name, token_plan))
+    for round_ops in rounds:
+        # builders that cast back to the column's type read it as of
+        # the previous round
+        dtypes = dict(df.dtypes)
+        exprs = {}
+        for column, (build, kwargs) in round_ops.items():
+            if build is cn.use_nickname_sql:
+                # the nickname set joins on the value as of this round
+                df, kwargs["arr_col"] = cn.nickname_join(df, column, assets.NICKNAMES)
+            if build in _TYPED:
+                kwargs["dtype"] = dtypes[column]
+            exprs[column] = F.expr(build(column, crn_key, **kwargs))
+        df = df.withColumns(exprs)
     if all_token_plans:
         df = apply_token_noise_all_columns(df, all_token_plans, crn_key, seed=seed)
 
     # final projection to the declared output schema, declared order
-    keep = [c for c in spec.column_names if c in df.columns]
-    return df.select(key_col, *keep)
+    return df.select(key_col, *[c for c in spec.column_names if c in present])

@@ -10,10 +10,28 @@ Shared driver contract (reference ``ColumnNoiseType.__call__``):
      missing are never selected;
   3. non-selected cells pass through bit-identical.
 
-Spark realization: one ``when(mask, noised).otherwise(col)`` projection
-per operator — fully columegen'd JVM expressions, no UDF, no shuffle.
-Each operator takes a ``u01`` factory (default :func:`hash_u01`) so the
-oracle-checked queries can swap in the DuckDB-portable LCG.
+Spark realization: each operator is a ``*_sql`` builder that writes the
+column's new value as Spark SQL text in pure Python,
+``CASE WHEN <mask> THEN <noised> ELSE <column> END`` — fully codegen'd
+JVM expressions, no UDF, no shuffle. Text costs Spark ONE parse per
+column; the equivalent ``F.*`` Column tree costs one Py4J round trip
+(plus PySpark's call-site capture) per expression node, which made the
+census plan build ~31k round trips and several seconds before any row
+moved. ``noise.noise_dataset`` applies one operator round of every
+column through a single ``withColumns``; the DataFrame functions of the
+same names apply one operator to one column (the oracle-checked
+queries and the unit tests call those).
+
+A builder references its input column by name only, never by an
+earlier operator's text: each operator reads its input about three
+times, so nesting successive operators textually would grow the text
+exponentially. Successive operators on a column are successive
+projections instead.
+
+Draws go through a ``u01`` factory (default :func:`hash_u01_sql`); the
+DataFrame functions also take the Column factories of
+:mod:`pseudopeople_spark.crn` (``portable_u01`` for the DuckDB-checked
+queries) and use their SQL-text twins.
 """
 
 from __future__ import annotations
@@ -23,41 +41,50 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pseudopeople_spark.crn import hash_u01
+from pseudopeople_spark.crn import hash_u01_sql, u01_sql
+from pseudopeople_spark.operators.sqltext import double, ident, string, string_array
 
-U01 = Callable[[Column, int, str], Column]
+U01Sql = Callable[[str, int, str], str]
 
 
 def _base_mask(
-    df: DataFrame,
     column: str,
-    key_col: str,
-    p: float | Column,
+    key: str,
+    p: str,
     seed: int,
     decision: str,
-    u01: U01,
+    u01: U01Sql,
     required: Sequence[str] = (),
-) -> Column:
-    u = u01(F.col(key_col), seed, decision)
-    eligible = F.col(column).isNotNull() & (F.col(column).cast("string") != "")
+) -> str:
+    c = ident(column)
+    eligible = f"({c} IS NOT NULL AND CAST({c} AS STRING) != '')"
     for r in required:
-        eligible = eligible & F.col(r).isNotNull()
-    return eligible & (u < p)
+        eligible = f"({eligible} AND {ident(r)} IS NOT NULL)"
+    return f"({eligible} AND {u01(ident(key), seed, decision)} < {p})"
 
 
-def _apply(df: DataFrame, column: str, mask: Column, noised: Column) -> DataFrame:
-    return df.withColumn(column, F.when(mask, noised).otherwise(F.col(column)))
+def _case(column: str, mask: str, noised: str) -> str:
+    return f"CASE WHEN {mask} THEN {noised} ELSE {ident(column)} END"
 
 
-def eligibility_proportion_expr(eligible: Column, notna: Column, tag: str) -> Column:
+def _apply(df: DataFrame, column: str, sql: str) -> DataFrame:
+    return df.withColumn(column, F.expr(sql))
+
+
+def _dtype(df: DataFrame, column: str) -> str:
+    return dict(df.dtypes)[column]
+
+
+def eligibility_proportion_expr(eligible: "Column | str", notna: "Column | str", tag: str) -> Column:
     """One aggregate expression: proportion of non-missing cells that
     are eligible for a scaled noise type (the reference's scaling
-    denominators, noise_scaling.py:26-45). ALL such proportions for a
-    dataset are computed in a SINGLE ``df.agg(...)`` crossJoined once
-    onto the data (see noise.noise_dataset): a per-operator
-    ``crossJoin(agg(self))`` doubles the self-referencing plan per
-    operator — taxes_1040 has 6 copy-noise columns, and the analyzer's
-    DeduplicateRelations walks the resulting 2^k duplicated subtrees.
+    denominators, noise_scaling.py:26-45). ``eligible`` / ``notna`` are
+    Columns or SQL text. ALL such proportions for a dataset are
+    computed in a SINGLE ``df.agg(...)`` crossJoined once onto the data
+    (see noise.noise_dataset): a per-operator ``crossJoin(agg(self))``
+    doubles the self-referencing plan per operator — taxes_1040 has 6
+    copy-noise columns, and the analyzer's DeduplicateRelations walks
+    the resulting 2^k duplicated subtrees.
 
     The counts sum as LONGS, not doubles: a double sum's value depends
     on partition merge order (FP rounding), which made the proportion —
@@ -65,29 +92,64 @@ def eligibility_proportion_expr(eligible: Column, notna: Column, tag: str) -> Co
     between runs (observed: ~28 of 3.3M draws flipping between two
     otherwise identical resolves). Integer sums are exact and
     order-independent; the single final division is deterministic."""
+    eligible, notna = (F.expr(x) if isinstance(x, str) else x for x in (eligible, notna))
     return (
         F.sum(eligible.cast("long")).cast("double") / F.sum(notna.cast("long")).cast("double")
     ).alias(tag)
 
 
-def _scaled_p(p: float, proportion_col: "str | None") -> "Column | float":
+def _scaled_p(p: float, proportion_col: "str | None") -> str:
     if proportion_col is None:
-        return p
+        return double(p)
     # proportion 0 (or null, empty frame) means NO cell is eligible —
     # the mask can never fire, so the rate is irrelevant; guard keeps
     # ANSI mode from raising DIVIDE_BY_ZERO on the unused branch
-    prop = F.col(proportion_col)
-    return F.when(prop > 0, F.least(F.lit(1.0), F.lit(p) / prop)).otherwise(F.lit(0.0))
+    prop = ident(proportion_col)
+    return f"CASE WHEN {prop} > 0 THEN least(1.0D, {double(p)} / {prop}) ELSE 0.0D END"
 
 
-def leave_blank(
-    df: DataFrame, column: str, key_col: str, p: float = 0.01, seed: int = 0, u01: U01 = hash_u01
-) -> DataFrame:
+def _uniform_pick(values: Sequence[str], u_pick: str) -> str:
+    # element_at over an ARRAY LITERAL: one foldable constant (never
+    # rebuilt per row) — measured ~50x cheaper than the per-index CASE
+    # chain this replaced, and it keeps the generated code size O(1) in
+    # the option count instead of O(n) branches (the CASE chains were
+    # what pushed the fused noise projection past Janino's 64KB method
+    # limit). floor(u*n) clamps to n-1 like the chain's otherwise-branch
+    # did (u < 1.0).
+    n = len(values)
+    idx = f"least(CAST(floor({u_pick} * {n}) AS INT), {n - 1})"
+    return f"element_at({string_array(values)}, {idx} + 1)"
+
+
+def leave_blank_sql(
+    column: str, key: str, p: float, seed: int, dtype: str, u01: U01Sql = hash_u01_sql
+) -> str:
     """Selected cells -> NULL (reference ``leave_blanks``,
     noise_functions.py:657-672). Spark nulls are native; no float
     promotion hack (output_dtype_getters.py:6-11) is needed."""
-    mask = _base_mask(df, column, key_col, p, seed, f"leave_blank_{column}", u01)
-    return _apply(df, column, mask, F.lit(None).cast(df.schema[column].dataType))
+    mask = _base_mask(column, key, double(p), seed, f"leave_blank_{column}", u01)
+    return _case(column, mask, f"CAST(NULL AS {dtype})")
+
+
+def leave_blank(
+    df: DataFrame, column: str, key_col: str, p: float = 0.01, seed: int = 0, u01=hash_u01_sql
+) -> DataFrame:
+    return _apply(df, column, leave_blank_sql(column, key_col, p, seed, _dtype(df, column), u01_sql(u01)))
+
+
+def choose_wrong_option_sql(
+    column: str, key: str, options: Sequence[str], p: float, seed: int, u01: U01Sql = hash_u01_sql
+) -> str:
+    """Replace with a uniform draw from the column's option list
+    (reference ``choose_wrong_options``, noise_functions.py:306-341).
+    The draw may self-collide, so the selection probability is scaled by
+    1/(1 - 1/n) to keep the *observed* change rate at p
+    (noise_scaling.py:10-23)."""
+    n = len(options)
+    p_scaled = min(1.0, p / (1.0 - 1.0 / n)) if n > 1 else p
+    mask = _base_mask(column, key, double(p_scaled), seed, f"choose_wrong_option_{column}", u01)
+    u_pick = u01(ident(key), seed, f"choose_wrong_option_pick_{column}")
+    return _case(column, mask, _uniform_pick(options, u_pick))
 
 
 def choose_wrong_option(
@@ -97,27 +159,33 @@ def choose_wrong_option(
     options: Sequence[str],
     p: float = 0.01,
     seed: int = 0,
-    u01: U01 = hash_u01,
+    u01=hash_u01_sql,
 ) -> DataFrame:
-    """Replace with a uniform draw from the column's option list
-    (reference ``choose_wrong_options``, noise_functions.py:306-341).
-    The draw may self-collide, so the selection probability is scaled by
-    1/(1 - 1/n) to keep the *observed* change rate at p
-    (noise_scaling.py:10-23)."""
-    n = len(options)
-    p_scaled = min(1.0, p / (1.0 - 1.0 / n)) if n > 1 else p
-    mask = _base_mask(df, column, key_col, p_scaled, seed, f"choose_wrong_option_{column}", u01)
-    u_pick = u01(F.col(key_col), seed, f"choose_wrong_option_pick_{column}")
-    # element_at over an ARRAY LITERAL: F.lit(list) builds one foldable
-    # Literal (constant, never rebuilt per row) — measured ~50x cheaper
-    # than the per-index CASE chain this replaced, and it keeps the
-    # generated code size O(1) in the option count instead of O(n)
-    # branches (the CASE chains were what pushed the fused noise
-    # projection past Janino's 64KB method limit). floor(u*n) clamps to
-    # n-1 like the chain's otherwise-branch did (u < 1.0).
-    idx = F.least(F.floor(u_pick * n).cast("int"), F.lit(n - 1))
-    pick = F.element_at(F.lit(list(options)), idx + 1)
-    return _apply(df, column, mask, pick)
+    return _apply(df, column, choose_wrong_option_sql(column, key_col, options, p, seed, u01_sql(u01)))
+
+
+def copy_from_household_member_sql(
+    column: str,
+    key: str,
+    copy_column: str,
+    p: float,
+    seed: int,
+    dtype: str,
+    u01: U01Sql = hash_u01_sql,
+    proportion_col: "str | None" = None,
+) -> str:
+    """Replace the value with the shadow copy_* column carrying another
+    household member's value (reference noise_functions.py:344-362;
+    shadow-column map constants/noise_type_metadata.py:17-26).
+    Rows with no eligible household member (copy column null) are never
+    selected; when ``proportion_col`` names a precomputed eligibility
+    proportion, the rate on eligible rows is scaled by 1/proportion so
+    the overall change rate stays at p (noise_scaling.py:37-45)."""
+    mask = _base_mask(
+        column, key, _scaled_p(p, proportion_col), seed, f"copy_from_household_member_{column}", u01,
+        required=[copy_column],
+    )
+    return _case(column, mask, f"CAST({ident(copy_column)} AS {dtype})")
 
 
 def copy_from_household_member(
@@ -127,22 +195,32 @@ def copy_from_household_member(
     copy_column: str,
     p: float = 0.01,
     seed: int = 0,
-    u01: U01 = hash_u01,
+    u01=hash_u01_sql,
     proportion_col: "str | None" = None,
 ) -> DataFrame:
-    """Replace the value with the shadow copy_* column carrying another
-    household member's value (reference noise_functions.py:344-362;
-    shadow-column map constants/noise_type_metadata.py:17-26).
-    Rows with no eligible household member (copy column null) are never
-    selected; when ``proportion_col`` names a precomputed eligibility
-    proportion, the rate on eligible rows is scaled by 1/proportion so
-    the overall change rate stays at p (noise_scaling.py:37-45)."""
-    p_eff = _scaled_p(p, proportion_col)
-    mask = _base_mask(
-        df, column, key_col, p_eff, seed, f"copy_from_household_member_{column}", u01,
-        required=[copy_column],
-    )
-    return _apply(df, column, mask, F.col(copy_column).cast(df.schema[column].dataType))
+    return _apply(df, column, copy_from_household_member_sql(
+        column, key_col, copy_column, p, seed, _dtype(df, column), u01_sql(u01), proportion_col,
+    ))
+
+
+def swap_month_and_day_sql(
+    column: str, key: str, date_format: str, p: float, seed: int, u01: U01Sql = hash_u01_sql
+) -> str:
+    """String-slice swap of the month and day segments of an already
+    stringified date (reference ``swap_months_and_days``,
+    noise_functions.py:365-404; dates are reformatted to strings before
+    noising, interface.py:255-285)."""
+    c = ident(column)
+    if date_format == "MM/dd/yyyy":
+        swapped = f"concat(substr({c}, 4, 3), substr({c}, 1, 2), substr({c}, 6, 5))"
+    elif date_format == "MMddyyyy":
+        swapped = f"concat(substr({c}, 3, 2), substr({c}, 1, 2), substr({c}, 5, 4))"
+    elif date_format == "yyyyMMdd":
+        swapped = f"concat(substr({c}, 1, 4), substr({c}, 7, 2), substr({c}, 5, 2))"
+    else:
+        raise ValueError(f"unsupported date format {date_format}")
+    mask = _base_mask(column, key, double(p), seed, f"swap_month_and_day_{column}", u01)
+    return _case(column, mask, swapped)
 
 
 def swap_month_and_day(
@@ -152,23 +230,36 @@ def swap_month_and_day(
     date_format: str = "MM/dd/yyyy",
     p: float = 0.01,
     seed: int = 0,
-    u01: U01 = hash_u01,
+    u01=hash_u01_sql,
 ) -> DataFrame:
-    """String-slice swap of the month and day segments of an already
-    stringified date (reference ``swap_months_and_days``,
-    noise_functions.py:365-404; dates are reformatted to strings before
-    noising, interface.py:255-285)."""
-    c = F.col(column)
-    if date_format == "MM/dd/yyyy":
-        swapped = F.concat(c.substr(4, 3), c.substr(1, 2), c.substr(6, 5))
-    elif date_format == "MMddyyyy":
-        swapped = F.concat(c.substr(3, 2), c.substr(1, 2), c.substr(5, 4))
-    elif date_format == "yyyyMMdd":
-        swapped = F.concat(c.substr(1, 4), c.substr(7, 2), c.substr(5, 2))
-    else:
-        raise ValueError(f"unsupported date format {date_format}")
-    mask = _base_mask(df, column, key_col, p, seed, f"swap_month_and_day_{column}", u01)
-    return _apply(df, column, mask, swapped)
+    return _apply(df, column, swap_month_and_day_sql(column, key_col, date_format, p, seed, u01_sql(u01)))
+
+
+def write_wrong_zipcode_digits_sql(
+    column: str,
+    key: str,
+    p: float,
+    seed: int,
+    digit_probabilities: Sequence[float] = (0.04, 0.04, 0.2, 0.36, 0.36),
+    u01: U01Sql = hash_u01_sql,
+) -> str:
+    """Per-digit replacement of a 5-digit zip: cell selected w.p. p,
+    then digit i replaced w.p. digit_probabilities[i] scaled by
+    1/(1 - 1/10) for self-collision, by a uniform random digit
+    (reference noise_functions.py:407-459; default position
+    probabilities noise_entities.py:63-65). Five chained built-in
+    expressions — no UDF."""
+    mask = _base_mask(column, key, double(p), seed, f"write_wrong_zipcode_{column}", u01)
+    c, k = ident(column), ident(key)
+    parts = []
+    for i, dp in enumerate(digit_probabilities):
+        u_sel = u01(k, seed, f"zip_sel_{column}_{i}")
+        u_dig = u01(k, seed, f"zip_dig_{column}_{i}")
+        parts.append(
+            f"CASE WHEN {u_sel} < {double(min(1.0, dp / 0.9))} "
+            f"THEN CAST(floor({u_dig} * 10) AS STRING) ELSE substr({c}, {i + 1}, 1) END"
+        )
+    return _case(column, mask, f"concat({', '.join(parts)})")
 
 
 def write_wrong_zipcode_digits(
@@ -178,24 +269,41 @@ def write_wrong_zipcode_digits(
     p: float = 0.01,
     digit_probabilities: Sequence[float] = (0.04, 0.04, 0.2, 0.36, 0.36),
     seed: int = 0,
-    u01: U01 = hash_u01,
+    u01=hash_u01_sql,
 ) -> DataFrame:
-    """Per-digit replacement of a 5-digit zip: cell selected w.p. p,
-    then digit i replaced w.p. digit_probabilities[i] scaled by
-    1/(1 - 1/10) for self-collision, by a uniform random digit
-    (reference noise_functions.py:407-459; default position
-    probabilities noise_entities.py:63-65). Five chained built-in
-    expressions — no UDF."""
-    mask = _base_mask(df, column, key_col, p, seed, f"write_wrong_zipcode_{column}", u01)
-    c = F.col(column)
-    parts = []
-    for i, dp in enumerate(digit_probabilities):
-        dp_scaled = min(1.0, dp / 0.9)
-        u_sel = u01(F.col(key_col), seed, f"zip_sel_{column}_{i}")
-        u_dig = u01(F.col(key_col), seed, f"zip_dig_{column}_{i}")
-        new_digit = F.floor(u_dig * 10).cast("string")
-        parts.append(F.when(u_sel < dp_scaled, new_digit).otherwise(c.substr(i + 1, 1)))
-    return _apply(df, column, mask, F.concat(*parts))
+    return _apply(df, column, write_wrong_zipcode_digits_sql(
+        column, key_col, p, seed, digit_probabilities, u01_sql(u01),
+    ))
+
+
+def misreport_age_sql(
+    column: str,
+    key: str,
+    p: float,
+    seed: int,
+    dtype: str,
+    age_differences: "dict[int, float] | None" = None,
+    u01: U01Sql = hash_u01_sql,
+) -> str:
+    """age += weighted draw from {-2:.1,-1:.4,+1:.4,+2:.1} (reference
+    ``misreport_ages``, noise_functions.py:462-494; defaults
+    noise_entities.py:70-72). Negative results reflect (* -1); a result
+    equal to the original (impossible with the default diffs, possible
+    after reflection) decrements by 1. CDF chain == searchsorted."""
+    diffs = age_differences or {-2: 0.1, -1: 0.4, 1: 0.4, 2: 0.1}
+    mask = _base_mask(column, key, double(p), seed, f"misreport_age_{column}", u01)
+    u_pick = u01(ident(key), seed, f"misreport_age_pick_{column}")
+    cdf = 0.0
+    whens = []
+    items = sorted(diffs.items())
+    for d, w in items:
+        cdf += w
+        whens.append(f"WHEN {u_pick} < {double(cdf)} THEN {int(d)}")
+    delta = f"CASE {' '.join(whens)} ELSE {int(items[-1][0])} END"
+    age = f"CAST({ident(column)} AS BIGINT)"
+    new_age = f"abs({age} + {delta})"  # reflect negatives
+    new_age = f"CASE WHEN {new_age} = {age} THEN {age} - 1 ELSE {new_age} END"
+    return _case(column, mask, f"CAST({new_age} AS {dtype})")
 
 
 def misreport_age(
@@ -205,41 +313,22 @@ def misreport_age(
     p: float = 0.01,
     age_differences: "dict[int, float] | None" = None,
     seed: int = 0,
-    u01: U01 = hash_u01,
+    u01=hash_u01_sql,
 ) -> DataFrame:
-    """age += weighted draw from {-2:.1,-1:.4,+1:.4,+2:.1} (reference
-    ``misreport_ages``, noise_functions.py:462-494; defaults
-    noise_entities.py:70-72). Negative results reflect (* -1); a result
-    equal to the original (impossible with the default diffs, possible
-    after reflection) decrements by 1. CDF chain == searchsorted."""
-    diffs = age_differences or {-2: 0.1, -1: 0.4, 1: 0.4, 2: 0.1}
-    mask = _base_mask(df, column, key_col, p, seed, f"misreport_age_{column}", u01)
-    u_pick = u01(F.col(key_col), seed, f"misreport_age_pick_{column}")
-    cdf = 0.0
-    expr: Column | None = None
-    items = sorted(diffs.items())
-    for d, w in items:
-        cdf += w
-        expr = F.when(u_pick < F.lit(cdf), F.lit(d)) if expr is None else expr.when(u_pick < F.lit(cdf), F.lit(d))
-    delta = expr.otherwise(F.lit(items[-1][0]))
-    age = F.col(column).cast("bigint")
-    new_age = age + delta
-    new_age = F.abs(new_age)  # reflect negatives
-    new_age = F.when(new_age == age, age - 1).otherwise(new_age)
-    out_type = df.schema[column].dataType
-    return _apply(df, column, mask, new_age.cast(out_type))
+    return _apply(df, column, misreport_age_sql(
+        column, key_col, p, seed, _dtype(df, column), age_differences, u01_sql(u01),
+    ))
 
 
-def write_wrong_digits(
-    df: DataFrame,
+def write_wrong_digits_sql(
     column: str,
-    key_col: str,
-    p: float = 0.01,
+    key: str,
+    p: float,
+    seed: int,
     token_probability: float = 0.1,
-    seed: int = 0,
-    u01: U01 = hash_u01,
+    u01: U01Sql = hash_u01_sql,
     max_len: int = 16,
-) -> DataFrame:
+) -> str:
     """Each numeric character of a selected cell is replaced w.p.
     token_probability/0.9 (self-collision scaling) by a uniform random
     digit; non-digit characters pass through (reference
@@ -254,18 +343,75 @@ def write_wrong_digits(
     per-position draws go through the pluggable ``u01`` with decision
     tags ``wwd_{column}_{i}`` / ``wwd_digit_{column}_{i}`` so the
     DuckDB oracle can replay them through the portable CRN."""
-    tp = min(1.0, token_probability / 0.9)
-    mask = _base_mask(df, column, key_col, p, seed, f"write_wrong_digits_{column}", u01)
-    key = F.col(key_col)
-    c = F.col(column).cast("string")
+    tp = double(min(1.0, token_probability / 0.9))
+    mask = _base_mask(column, key, double(p), seed, f"write_wrong_digits_{column}", u01)
+    k = ident(key)
+    c = f"CAST({ident(column)} AS STRING)"
     parts = []
     for i in range(max_len):
-        ch = c.substr(i + 1, 1)
-        u_sel = u01(key, seed, f"wwd_{column}_{i}")
-        dig = F.floor(u01(key, seed, f"wwd_digit_{column}_{i}") * 10).cast("string")
-        parts.append(F.when((ch >= "0") & (ch <= "9") & (u_sel < tp), dig).otherwise(ch))
-    noised = F.concat(F.concat(*parts), F.substring(c, max_len + 1, 1_000_000))
-    return _apply(df, column, mask, noised)
+        ch = f"substr({c}, {i + 1}, 1)"
+        u_sel = u01(k, seed, f"wwd_{column}_{i}")
+        dig = f"CAST(floor({u01(k, seed, f'wwd_digit_{column}_{i}')} * 10) AS STRING)"
+        parts.append(f"CASE WHEN {ch} >= '0' AND {ch} <= '9' AND {u_sel} < {tp} THEN {dig} ELSE {ch} END")
+    noised = f"concat(concat({', '.join(parts)}), substring({c}, {max_len + 1}, 1000000))"
+    return _case(column, mask, noised)
+
+
+def write_wrong_digits(
+    df: DataFrame,
+    column: str,
+    key_col: str,
+    p: float = 0.01,
+    token_probability: float = 0.1,
+    seed: int = 0,
+    u01=hash_u01_sql,
+    max_len: int = 16,
+) -> DataFrame:
+    return _apply(df, column, write_wrong_digits_sql(
+        column, key_col, p, seed, token_probability, u01_sql(u01), max_len,
+    ))
+
+
+def _nick_cols(column: str) -> "tuple[str, str]":
+    return f"__nick_name_{column}", f"__nick_arr_{column}"
+
+
+def nickname_join(df: DataFrame, column: str, nicknames: "dict[str, Sequence[str]]") -> "tuple[DataFrame, str]":
+    """Left-join each row's nickname set for ``column``'s CURRENT value;
+    returns the joined frame and the name of the added array column.
+    The nickname table is tiny -> BROADCAST hash join (a map/array
+    literal would be re-constructed per row — CreateMap isn't constant-
+    folded — which measured ~10s/1M rows; the broadcast join is free).
+    The join columns are named per target column, so several name
+    columns can be joined before one projection round."""
+    name_col, arr_col = _nick_cols(column)
+    rows = [(name, list(nicks)) for name, nicks in nicknames.items()]
+    nick_df = F.broadcast(
+        df.sparkSession.createDataFrame(rows, f"{ident(name_col)} string, {ident(arr_col)} array<string>")
+    )
+    return df.join(nick_df, F.col(column) == F.col(name_col), "left"), arr_col
+
+
+def use_nickname_sql(
+    column: str,
+    key: str,
+    arr_col: str,
+    p: float,
+    seed: int,
+    u01: U01Sql = hash_u01_sql,
+    proportion_col: "str | None" = None,
+) -> str:
+    """Names with a known nickname set (``arr_col``, from
+    :func:`nickname_join`) are replaced by a uniform nickname choice
+    (reference ``use_nicknames``, noise_functions.py:555-582; 2-D choice
+    kernel utilities.py:129-171). ``proportion_col`` (precomputed, see
+    noise.noise_dataset) applies the 1/proportion-have-nickname scaling
+    (noise_scaling.py:26-34)."""
+    arr = ident(arr_col)
+    base = _base_mask(column, key, _scaled_p(p, proportion_col), seed, f"use_nickname_{column}", u01)
+    mask = f"({base} AND {arr} IS NOT NULL)"
+    u_pick = u01(ident(key), seed, f"use_nickname_pick_{column}")
+    return _case(column, mask, f"element_at({arr}, CAST(floor({u_pick} * size({arr})) + 1 AS INT))")
 
 
 def use_nickname(
@@ -275,29 +421,24 @@ def use_nickname(
     nicknames: "dict[str, Sequence[str]]",
     p: float = 0.01,
     seed: int = 0,
-    u01: U01 = hash_u01,
+    u01=hash_u01_sql,
     proportion_col: "str | None" = None,
 ) -> DataFrame:
-    """Names with a known nickname set are replaced by a uniform
-    nickname choice (reference ``use_nicknames``,
-    noise_functions.py:555-582; 2-D choice kernel utilities.py:129-171).
-    The nickname table is tiny -> BROADCAST hash join (a map/array
-    literal would be re-constructed per row — CreateMap isn't constant-
-    folded — which measured ~10s/1M rows; the broadcast join is free).
-    ``proportion_col`` (precomputed, see noise.noise_dataset) applies
-    the 1/proportion-have-nickname scaling (noise_scaling.py:26-34)."""
-    spark = df.sparkSession
-    rows = [(name, list(nicks)) for name, nicks in nicknames.items()]
-    nick_df = F.broadcast(
-        spark.createDataFrame(rows, f"__nick_name string, __nick_arr array<string>")
-    )
-    joined = df.join(nick_df, F.col(column) == F.col("__nick_name"), "left")
-    arr = F.col("__nick_arr")
-    p_eff = _scaled_p(p, proportion_col)
-    mask = _base_mask(joined, column, key_col, p_eff, seed, f"use_nickname_{column}", u01) & arr.isNotNull()
-    u_pick = u01(F.col(key_col), seed, f"use_nickname_pick_{column}")
-    pick = F.element_at(arr, (F.floor(u_pick * F.size(arr)) + 1).cast("int"))
-    return _apply(joined, column, mask, pick).drop("__nick_name", "__nick_arr")
+    joined, arr_col = nickname_join(df, column, nicknames)
+    sql = use_nickname_sql(column, key_col, arr_col, p, seed, u01_sql(u01), proportion_col)
+    return _apply(joined, column, sql).drop(*_nick_cols(column))
+
+
+def use_fake_name_sql(
+    column: str, key: str, fake_names: Sequence[str], p: float, seed: int, u01: U01Sql = hash_u01_sql
+) -> str:
+    """Replace with a uniform draw from a fake/placeholder name list
+    (reference ``use_fake_names``, noise_functions.py:585-626; lists in
+    data/fake_names.py). The pick indexes one foldable array literal —
+    no per-row array construction, O(1) generated code."""
+    mask = _base_mask(column, key, double(p), seed, f"use_fake_name_{column}", u01)
+    u_pick = u01(ident(key), seed, f"use_fake_name_pick_{column}")
+    return _case(column, mask, _uniform_pick(fake_names, u_pick))
 
 
 def use_fake_name(
@@ -307,17 +448,6 @@ def use_fake_name(
     fake_names: Sequence[str],
     p: float = 0.01,
     seed: int = 0,
-    u01: U01 = hash_u01,
+    u01=hash_u01_sql,
 ) -> DataFrame:
-    """Replace with a uniform draw from a fake/placeholder name list
-    (reference ``use_fake_names``, noise_functions.py:585-626; lists in
-    data/fake_names.py). The pick indexes one foldable array literal —
-    no per-row array construction, O(1) generated code."""
-    mask = _base_mask(df, column, key_col, p, seed, f"use_fake_name_{column}", u01)
-    u_pick = u01(F.col(key_col), seed, f"use_fake_name_pick_{column}")
-    # array-literal pick — see choose_wrong_option for why this replaced
-    # the per-index CASE chain (same values: same index, same list)
-    n = len(fake_names)
-    idx = F.least(F.floor(u_pick * n).cast("int"), F.lit(n - 1))
-    pick = F.element_at(F.lit(list(fake_names)), idx + 1)
-    return _apply(df, column, mask, pick)
+    return _apply(df, column, use_fake_name_sql(column, key_col, fake_names, p, seed, u01_sql(u01)))

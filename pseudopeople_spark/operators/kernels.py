@@ -361,8 +361,7 @@ def apply_token_noise_all_columns(
     struct_col = noise_all(key_expr, *[F.col(c) for c, _ in column_plans])
     tmp = "__tok_noise"
     df = df.withColumn(tmp, struct_col)
-    for column, _ in column_plans:
-        df = df.withColumn(column, F.col(tmp)[column])
+    df = df.withColumns({column: F.col(tmp)[column] for column, _ in column_plans})
     return df.drop(tmp)
 
 
@@ -419,34 +418,3 @@ def _salt(seed: int, decision: str) -> int:
     for ch in decision:
         acc = ((acc * 1099511628211) ^ ord(ch)) & 0xFFFFFFFFFFFFFFFF
     return acc
-
-
-def apply_token_noise(
-    df,
-    column: str,
-    key_col: str,
-    kind: str,
-    rules,
-    cell_probability: float = 0.01,
-    token_probability: float = 0.1,
-    seed: int = 0,
-    u01: Callable = None,
-):
-    """Driver for the three token-noise operators: JVM-side CRN cell
-    mask + one pandas-UDF projection. The mask keeps the Python work at
-    O(cell_probability · rows)."""
-    from pseudopeople_spark.crn import hash_u01
-
-    u01 = u01 or hash_u01
-    decision = f"{kind}_{column}"
-    mask = (
-        F.col(column).isNotNull()
-        & (F.col(column).cast("string") != "")
-        & (u01(F.col(key_col), seed, decision) < cell_probability)
-    )
-    key64 = F.xxhash64(F.lit(str(seed)), F.lit(decision), F.col(key_col).cast("string"))
-    if kind == "make_typos":
-        udf = make_typos_udf(rules, token_probability, seed=seed, decision=decision)
-    else:
-        udf = make_corrupt_tokens_udf(rules, token_probability, seed=seed, decision=decision)
-    return df.withColumn(column, udf(key64, mask, F.col(column)))

@@ -5,18 +5,22 @@ All row selection is CRN-keyed on the stable record key — NEVER
 ``df.sample()`` (partition-dependent) — matching the reference's
 shard-count-invariance contract
 (``tests/integration/test_interface.py:90-153``).
+
+Like the column operators, the filters and projections are written as
+Spark SQL text, so building them costs a few JVM calls rather than one
+per expression node (see ``column_noise``). ``u01`` is a text factory
+or a Column factory with a SQL-text twin (``crn.u01_sql``).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Mapping, Sequence
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pseudopeople_spark.crn import hash_u01
-
-U01 = Callable[[Column, int, str], Column]
+from pseudopeople_spark.crn import hash_u01_sql, u01_sql
+from pseudopeople_spark.operators.sqltext import double, ident, string
 
 # Demographic non-response model constants — the reference's published
 # values (constants/data_values.py:8-45): base + race additive +
@@ -51,12 +55,12 @@ DNR_DEFAULT_LEVELS: "dict[str, float]" = {
 
 
 def omit_rows(
-    df: DataFrame, key_col: str, p: float = 0.005, seed: int = 0, u01: U01 = hash_u01
+    df: DataFrame, key_col: str, p: float = 0.005, seed: int = 0, u01=hash_u01_sql
 ) -> DataFrame:
     """Uniform random row deletion (reference ``omit_rows``,
     noise_functions.py:33-59). Key-deterministic hash filter — a single
     columnar pass, no shuffle."""
-    return df.where(u01(F.col(key_col), seed, "omit_row") >= p)
+    return df.where(f"{u01_sql(u01)(ident(key_col), seed, 'omit_row')} >= {double(p)}")
 
 
 def do_not_respond(
@@ -70,37 +74,38 @@ def do_not_respond(
     race_col: str = "race_ethnicity",
     oversample_adjust: bool = False,
     cps_additive: float = 0.0,
-    u01: U01 = hash_u01,
+    u01=hash_u01_sql,
 ) -> DataFrame:
     """Demographic non-response (reference ``apply_do_not_respond``,
     noise_functions.py:99-142): per-row probability = clip_[0,1](base +
     race additive + sex×age-bin additive) [+ 0.276 for CPS], scaled by
     configured/default (default 0.0145 census/ACS, 0.2905 CPS); then the
     ACS/CPS oversampling transform 0.5 + p/2. Realized as nested
-    ``when`` chains over the tiny lookup tables — pure JVM expressions,
-    no join needed (the reference's pd.cut age-binning collapses to a
-    CASE chain)."""
-    race_expr: Column = F.lit(0.0)
-    for race, adj in DNR_RACE_ADJ.items():
-        race_expr = F.when(F.col(race_col) == race, F.lit(adj)).otherwise(race_expr)
-    sexage_expr: Column = F.lit(0.0)
-    age = F.col(age_col).cast("bigint")
-    for sex, lo, hi, adj in DNR_SEX_AGE_ADJ:
-        sexage_expr = F.when(
-            (F.col(sex_col) == sex) & (age >= lo) & (age < hi), F.lit(adj)
-        ).otherwise(sexage_expr)
-    p = F.least(F.greatest(F.lit(DNR_BASE) + race_expr + sexage_expr, F.lit(0.0)), F.lit(1.0))
+    CASE chains over the tiny lookup tables — pure JVM expressions, no
+    join needed (the reference's pd.cut age-binning collapses to a CASE
+    chain)."""
+    race = ident(race_col)
+    race_expr = "0.0D"
+    for r, adj in DNR_RACE_ADJ.items():
+        race_expr = f"CASE WHEN {race} = {string(r)} THEN {double(adj)} ELSE {race_expr} END"
+    sex, age = ident(sex_col), f"CAST({ident(age_col)} AS BIGINT)"
+    sexage_expr = "0.0D"
+    for sx, lo, hi, adj in DNR_SEX_AGE_ADJ:
+        sexage_expr = (
+            f"CASE WHEN {sex} = {string(sx)} AND {age} >= {lo} AND {age} < {hi} "
+            f"THEN {double(adj)} ELSE {sexage_expr} END"
+        )
+    p = f"least(greatest({double(DNR_BASE)} + ({race_expr}) + ({sexage_expr}), 0.0D), 1.0D)"
     if cps_additive:
-        p = p + F.lit(cps_additive)
-    p = p * F.lit(configured_level / default_level)
+        p = f"({p} + {double(cps_additive)})"
+    p = f"({p} * {double(configured_level / default_level)})"
     if oversample_adjust:
-        p = F.lit(0.5) + p / 2
-    p = F.least(p, F.lit(1.0))
-    return df.where(u01(F.col(key_col), seed, "do_not_respond") >= p)
+        p = f"(0.5D + {p} / 2)"
+    return df.where(f"{u01_sql(u01)(ident(key_col), seed, 'do_not_respond')} >= least({p}, 1.0D)")
 
 
 def duplicate_rows(
-    df: DataFrame, key_col: str, p: float = 0.05, seed: int = 0, u01: U01 = hash_u01
+    df: DataFrame, key_col: str, p: float = 0.05, seed: int = 0, u01=hash_u01_sql
 ) -> DataFrame:
     """Uniform row duplication — the reference's commented-out stub
     (noise_functions.py:145-158, 'todo actually duplicate rows'),
@@ -111,9 +116,10 @@ def duplicate_rows(
     record_id would silently break every downstream key consumer — CRN
     draws would noise the twins identically, key joins would fan out,
     and cluster_records(ids_unique=True) assumes unique ids."""
-    base = df.withColumn(key_col, F.col(key_col).cast("string"))  # deterministic output type
-    dupes = base.where(u01(F.col(key_col), seed, "duplicate_row") < p)
-    dupes = dupes.withColumn(key_col, F.concat(F.col(key_col), F.lit("_dup2")))
+    k = ident(key_col)
+    base = df.withColumn(key_col, F.expr(f"CAST({k} AS STRING)"))  # deterministic output type
+    dupes = base.where(f"{u01_sql(u01)(k, seed, 'duplicate_row')} < {double(p)}")
+    dupes = dupes.withColumn(key_col, F.expr(f"concat({k}, '_dup2')"))
     return base.unionByName(dupes)
 
 
@@ -151,7 +157,7 @@ def duplicate_with_guardian(
     relationship_col: str = "relationship_to_reference_person",
     household_col: str = "household_id",
     year_col: str = "year",
-    u01: U01 = hash_u01,
+    u01=hash_u01_sql,
 ) -> DataFrame:
     """Duplicate dependents at their guardian's address (reference
     ``duplicate_with_guardian``, noise_functions.py:161-303; copied
@@ -180,11 +186,13 @@ def duplicate_with_guardian(
     cols = df.columns
     copy_cols = [c for c in (address_columns or GUARDIAN_DUPLICATION_ADDRESS_COLUMNS) if c in cols]
     g1, g2 = guardian_cols
-    age = F.col(age_col).cast("bigint")
-    housing = F.col(housing_col) if housing_col in cols else F.lit("Household")
-    in_household = (age < 18) & (housing == "Household")
-    in_college = (age < 24) & (housing == "College")
-    dependents = df.where((in_household | in_college) & F.col(g1).isNotNull())
+    u01 = u01_sql(u01)
+    key = ident(key_col)
+    age = f"CAST({ident(age_col)} AS BIGINT)"
+    housing = ident(housing_col) if housing_col in cols else "'Household'"
+    in_household = f"({age} < 18 AND {housing} = 'Household')"
+    in_college = f"({age} < 24 AND {housing} = 'College')"
+    dependents = df.where(f"({in_household} OR {in_college}) AND {ident(g1)} IS NOT NULL")
 
     # Selection draw BEFORE the guardian joins: the Bernoulli draw
     # depends only on (key, age, housing) — never on join results — so
@@ -192,12 +200,13 @@ def duplicate_with_guardian(
     # after the merge, while the joins now probe ~p of the dependents
     # (2-5%) instead of all of them. The guardian build side is
     # unchanged; the probe-side shuffle shrinks ~20-50x.
-    p_row = F.when(in_college, F.lit(p_college)).otherwise(F.lit(p_under_18))
+    p_row = f"CASE WHEN {in_college} THEN {double(p_college)} ELSE {double(p_under_18)} END"
     # per-group decision keys, like the reference's per-group streams
-    u_noise = F.when(
-        in_college, u01(F.col(key_col), seed, "duplicate_with_guardian_college")
-    ).otherwise(u01(F.col(key_col), seed, "duplicate_with_guardian_households"))
-    dependents = dependents.where(u_noise < p_row)
+    u_noise = (
+        f"CASE WHEN {in_college} THEN {u01(key, seed, 'duplicate_with_guardian_college')} "
+        f"ELSE {u01(key, seed, 'duplicate_with_guardian_households')} END"
+    )
+    dependents = dependents.where(f"{u_noise} < {p_row}")
 
     has_year = year_col in cols
     has_hh = household_col in cols
@@ -207,10 +216,10 @@ def duplicate_with_guardian(
     # year is the join key — its alias already carries it, and "copying"
     # it is a no-op (join equality), so keep it out of the copy list
     proj_cols = [c for c in copy_cols + side_cols if c != year_col]
-    guardians = df.select(
-        F.col(simulant_col).alias("_g_sid"),
-        *([F.col(year_col).alias("_g_year")] if has_year else []),
-        *[F.col(c).alias(f"_g_{c}") for c in proj_cols],
+    guardians = df.selectExpr(
+        f"{ident(simulant_col)} AS _g_sid",
+        *([f"{ident(year_col)} AS _g_year"] if has_year else []),
+        *[f"{ident(c)} AS {ident('_g_' + c)}" for c in proj_cols],
     )
     # Semi-join pruning BEFORE the defensive dedup (guide §3.2): only
     # guardians referenced by a SELECTED dependent can contribute to
@@ -221,71 +230,72 @@ def duplicate_with_guardian(
     # to a broadcast semi filter + a small shuffle. Left joins on a
     # semi-pruned build side produce identical rows: pruned-away
     # guardians could only have matched unselected dependents.
-    dep_keys = dependents.select(
-        F.explode(F.array(F.col(g1), F.col(g2))).alias("_g_sid")
-    ).where(F.col("_g_sid").isNotNull())
+    dep_keys = dependents.selectExpr(
+        f"explode(array({ident(g1)}, {ident(g2)})) AS _g_sid"
+    ).where("_g_sid IS NOT NULL")
     guardians = guardians.join(F.broadcast(dep_keys), "_g_sid", "left_semi")
     # A guardian appears once per (simulant, year) in a well-formed
     # extract; dedup defensively so one dependent row can't fan out.
     guardians = guardians.dropDuplicates(["_g_sid"] + (["_g_year"] if has_year else []))
 
+    def g(prefix: str, c: str) -> str:
+        return ident(f"{prefix}_{c}")
+
     def join_one(base: DataFrame, gcol: str, prefix: str) -> DataFrame:
-        g = guardians.select(
-            F.col("_g_sid").alias(f"{prefix}_sid"),
-            *([F.col("_g_year").alias(f"{prefix}_year")] if has_year else []),
-            *[F.col(f"_g_{c}").alias(f"{prefix}_{c}") for c in proj_cols],
+        side = guardians.selectExpr(
+            f"_g_sid AS {g(prefix, 'sid')}",
+            *([f"_g_year AS {g(prefix, 'year')}"] if has_year else []),
+            *[f"{ident('_g_' + c)} AS {g(prefix, c)}" for c in proj_cols],
         )
-        cond = base[gcol] == g[f"{prefix}_sid"]
+        cond = f"{ident(gcol)} = {g(prefix, 'sid')}"
         if has_year:
-            cond = cond & (base[year_col] == g[f"{prefix}_year"])
-        return base.join(g, cond, "left")
+            cond = f"{cond} AND {ident(year_col)} = {g(prefix, 'year')}"
+        return base.join(side, F.expr(cond), "left")
 
     merged = join_one(join_one(dependents, g1, "_g1"), g2, "_g2")
 
     if has_hh:
-        def differs(prefix: str):
-            gh = F.col(f"{prefix}_{household_col}")
+        def differs(prefix: str) -> str:
+            gh = g(prefix, household_col)
             # null-safe inequality: the reference compares in pandas where
             # NaN != value is True (noise_functions.py:243-248), so a
             # dependent with a NULL household id living apart from a
             # guardian IS eligible — Spark's null-propagating != would
             # silently exclude those rows
-            return gh.isNotNull() & ~F.col(household_col).eqNullSafe(gh)
+            return f"({gh} IS NOT NULL AND NOT ({ident(household_col)} <=> {gh}))"
     else:  # fallback when the extract carries no household id: any copied column differs
-        def differs(prefix: str):
-            any_neq = F.lit(False)
+        def differs(prefix: str) -> str:
+            any_neq = "false"
             for c in copy_cols:
-                any_neq = any_neq | ~F.col(c).eqNullSafe(F.col(f"{prefix}_{c}"))
-            return F.col(f"{prefix}_sid").isNotNull() & any_neq
+                any_neq = f"({any_neq} OR NOT ({ident(c)} <=> {g(prefix, c)}))"
+            return f"({g(prefix, 'sid')} IS NOT NULL AND {any_neq})"
 
     g1_diff, g2_diff = differs("_g1"), differs("_g2")
-    u_choice = u01(F.col(key_col), seed, "dwg_guardian_choice")
+    u_choice = u01(key, seed, "dwg_guardian_choice")
     chosen = (
-        F.when(g1_diff & g2_diff, F.when(u_choice < 0.5, F.lit("_g1")).otherwise(F.lit("_g2")))
-        .when(g1_diff, F.lit("_g1"))
-        .when(g2_diff, F.lit("_g2"))
+        f"CASE WHEN {g1_diff} AND {g2_diff} THEN "
+        f"(CASE WHEN {u_choice} < 0.5D THEN '_g1' ELSE '_g2' END) "
+        f"WHEN {g1_diff} THEN '_g1' WHEN {g2_diff} THEN '_g2' END"
     )
     # (u_noise < p_row) already applied pre-join above
-    selected = merged.withColumn("_copy_from", chosen).where(
-        F.col("_copy_from").isNotNull()
-    )
+    selected = merged.withColumn("_copy_from", F.expr(chosen)).where("_copy_from IS NOT NULL")
 
-    def copied(c: str):
-        return F.when(F.col("_copy_from") == "_g1", F.col(f"_g1_{c}")).otherwise(F.col(f"_g2_{c}"))
+    def copied(c: str) -> str:
+        return f"CASE WHEN _copy_from = '_g1' THEN {g('_g1', c)} ELSE {g('_g2', c)} END"
 
     dup_cols = []
     for c in cols:
         if c == relationship_col:
             src_housing = copied(housing_col) if housing_col in copy_cols else housing
-            remap = F.lit(None).cast("string")
+            remap = "CAST(NULL AS STRING)"
             for ht, rel in HOUSING_TYPE_RELATIONSHIP_MAP.items():
-                remap = F.when(src_housing == ht, F.lit(rel)).otherwise(remap)
-            dup_cols.append(remap.alias(c))
+                remap = f"CASE WHEN {src_housing} = {string(ht)} THEN {string(rel)} ELSE {remap} END"
+            dup_cols.append(f"{remap} AS {ident(c)}")
         elif c in copy_cols:
-            dup_cols.append(copied(c).alias(c))
+            dup_cols.append(f"{copied(c)} AS {ident(c)}")
         elif c == key_col:
-            dup_cols.append(F.concat(F.col(key_col).cast("string"), F.lit("_dup")).alias(c))
+            dup_cols.append(f"concat(CAST({key} AS STRING), '_dup') AS {key}")
         else:
-            dup_cols.append(F.col(c))
-    duplicates = selected.select(*dup_cols)
+            dup_cols.append(ident(c))
+    duplicates = selected.selectExpr(*dup_cols)
     return df.unionByName(duplicates)

@@ -15,6 +15,37 @@ from pyspark.sql import SparkSession
 
 _WARMED: "set[str]" = set()
 
+DRIVER_MEMORY_CAP_MB = 24 * 1024
+DRIVER_MEMORY_SHARE = 0.4
+
+
+def default_driver_memory(mem_total_kb: "int | None") -> str:
+    """Driver heap for a host with ``mem_total_kb`` of memory (MemTotal
+    of /proc/meminfo): ~40 % of it, at most 24g (the old fixed default,
+    which the kernel OOM-kills on a 15 GB host), at least 1g. Unknown
+    memory keeps 24g."""
+    if not mem_total_kb:
+        return "24g"
+    mb = int(mem_total_kb * DRIVER_MEMORY_SHARE) // 1024
+    return "24g" if mb >= DRIVER_MEMORY_CAP_MB else f"{max(mb, 1024)}m"
+
+
+def _mem_total_kb() -> "int | None":
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def driver_memory() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM if set, else :func:`default_driver_memory`
+    of this host."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(_mem_total_kb())
+
 
 def _warm_session(spark: SparkSession) -> None:
     """One small throwaway job per NEW session exercising the hot
@@ -70,7 +101,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

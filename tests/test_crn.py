@@ -6,7 +6,17 @@ import duckdb
 import numpy as np
 from pyspark.sql import functions as F
 
-from pseudopeople_spark.crn import hash_u01, portable_u01, portable_u01_sql, splitmix64_u01
+import pytest
+
+from pseudopeople_spark.crn import (
+    hash_u01,
+    hash_u01_sql,
+    portable_u01,
+    portable_u01_spark_sql,
+    portable_u01_sql,
+    splitmix64_u01,
+    u01_sql,
+)
 
 
 def test_hash_u01_range_and_determinism(spark):
@@ -36,6 +46,34 @@ def test_portable_u01_matches_duckdb(spark):
     duck = duckdb.sql(f"SELECT i, {expr} AS u FROM (SELECT unnest(range(2000)) AS i)").fetchall()
     for i, u in duck:
         assert spark_vals[i] == u, f"id {i}: spark {spark_vals[i]} != duckdb {u}"
+
+
+@pytest.mark.parametrize(
+    "column_form, text_form", [(hash_u01, hash_u01_sql), (portable_u01, portable_u01_spark_sql)]
+)
+def test_sql_text_twin_draws_bit_identical(spark, column_form, text_form):
+    """The noise plan is built from the SQL-text twins; every draw must
+    equal the Column form's bit for bit, over negative, small and
+    int64-extreme keys and over seeds whose folded salt is negative."""
+    extremes = spark.createDataFrame(
+        [(-(2**63),), (2**63 - 1,), (2**31 - 1,), (2**31,), (-1,)], "id bigint"
+    )
+    keys = spark.range(-1000, 1000).unionByName(extremes)
+    assert u01_sql(column_form) is text_form and u01_sql(text_form) is text_form
+    for seed, decision in [(0, "leave_blank_first_name"), (7, "wwd_digit_ssn_3"), ("s|x", "omit_row")]:
+        if column_form is portable_u01 and isinstance(seed, str):
+            continue  # the portable LCG takes integer seeds only
+        got = keys.select(
+            "id",
+            column_form(F.col("id"), seed, decision).alias("a"),
+            F.expr(text_form("id", seed, decision)).alias("b"),
+        ).where("NOT (a <=> b)")
+        assert got.count() == 0, got.limit(5).collect()
+
+
+def test_u01_sql_rejects_unknown_factory():
+    with pytest.raises(TypeError):
+        u01_sql(lambda key, seed, decision: key)
 
 
 def test_splitmix64_u01_vectorized_stateless():

@@ -49,6 +49,36 @@ def test_noise_plan_single_arrow_crossing(spark):
     assert count_python_eval_nodes(noised) == 1
 
 
+# Py4J round trips of one census noise_dataset build: 1,003 measured in
+# a local[8] session, plus headroom. The plan is SQL text, so the count
+# scales with columns, not expression nodes; the Column-API build made
+# ~31k-38k. Memory commands are not counted: they release Java
+# references of earlier objects as Python's collector finalizes them
+# (316-955 observed during one build, depending on prior garbage).
+NOISE_PLAN_MAX_ROUND_TRIPS = 1_100
+
+
+def test_noise_plan_build_py4j_round_trips(spark, monkeypatch):
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    census = synth.census_records(synth.simulants(spark, 100, seed=1), 2020)
+    cfg = config.get_config()
+    noise.noise_dataset(census, D.DECENNIAL_CENSUS, cfg, seed=2)  # loads assets, warms caches
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    noise.noise_dataset(census, D.DECENNIAL_CENSUS, cfg, seed=3)
+    monkeypatch.undo()
+    assert len(calls) <= NOISE_PLAN_MAX_ROUND_TRIPS
+
+
 def test_no_rowwise_python_udfs_anywhere(spark):
     """BatchEvalPython (row-at-a-time pickling) must never appear; only
     ArrowEvalPython (vectorized) is allowed."""

@@ -111,6 +111,21 @@ def test_ipc_lookup_call_removes_previous_scratch_dir(spark, tmp_path, monkeypat
     assert sorted(small.collect()) == want
 
 
+def test_ipc_lookup_over_byte_gate_takes_parquet_path(spark, tmp_path, monkeypatch):
+    """A records table under the row gate but over the byte gate is
+    looked up from scratch parquet, with unchanged scores."""
+    monkeypatch.setenv("PP_FUSED_LOOKUP_DIR", str(tmp_path))
+    records, pairs = _records_and_pairs(spark)
+    n = len(_rows()) * 2
+    want = sorted(scoring.score_pairs_fused(spark, pairs, records, _FIELDS, n_records=n).collect())
+    assert list(tmp_path.iterdir()) == []  # IPC path: no scratch write
+    monkeypatch.setattr(scoring, "SMALL_LOOKUP_MAX_BYTES", 1)
+    gated = scoring.score_pairs_fused(spark, pairs, records, _FIELDS, n_records=n)
+    assert len(list(tmp_path.iterdir())) == 1  # the parquet lookup
+    assert scoring._LIVE_REC_DIR is not None
+    assert sorted(gated.collect()) == want
+
+
 def test_arrow_scorer_known_values(wide):
     a = _collect(scoring.score_pairs_arrow(wide))
     # equal non-empty strings -> 1.0; both-empty names -> 0.0
