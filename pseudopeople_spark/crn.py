@@ -27,6 +27,9 @@ Three implementations, one contract:
 * :func:`splitmix64_u01` — numpy uint64 splitmix64 for per-(row, token)
   draws inside Arrow pandas UDF kernels (token corruption), fully
   vectorized, no per-row Generator objects.
+
+Each SQL-text twin also has a salt-as-SQL form (:func:`salted_u01_sql`)
+for draws whose decision is picked per element inside one expression.
 """
 
 from __future__ import annotations
@@ -81,10 +84,15 @@ def hash_u01_sql(key_sql: str, seed: int | str, decision: str) -> str:
     Py4J round trip per expression node (see noise.noise_dataset).
     Literals carry explicit types: a bare ``0.5`` would parse as a
     DECIMAL."""
-    return (
-        f"(CAST(pmod(xxhash64(CAST({fold_salt64(seed, decision)} AS BIGINT), {key_sql}), "
-        f"{2**40}L) AS DOUBLE) / {_TWO40!r}D)"
-    )
+    return hash_u01_salted_sql(key_sql, f"CAST({fold_salt64(seed, decision)} AS BIGINT)")
+
+
+def hash_u01_salted_sql(key_sql: str, salt_sql: str) -> str:
+    """:func:`hash_u01_sql` over a salt given as a BIGINT SQL expression
+    (``fold_salt64(seed, decision)`` as a literal, or picked from an
+    array of such literals). xxhash64 hashes the salt's long value, so
+    the draw does not depend on where the salt comes from."""
+    return f"(CAST(pmod(xxhash64({salt_sql}, {key_sql}), {2**40}L) AS DOUBLE) / {_TWO40!r}D)"
 
 
 def _mix_decision(seed: int, decision: str) -> int:
@@ -124,9 +132,15 @@ def portable_u01_spark_sql(key_sql: str, seed: int, decision: str) -> str:
     """Spark SQL text of :func:`portable_u01` (``pmod`` over the key cast
     to BIGINT, exactly as the Column form builds it). The DuckDB oracle
     keeps its own text, :func:`portable_u01_sql`."""
-    d = _mix_decision(seed, decision)
+    return portable_u01_salted_sql(key_sql, str(_mix_decision(seed, decision)))
+
+
+def portable_u01_salted_sql(key_sql: str, salt_sql: str) -> str:
+    """:func:`portable_u01_spark_sql` over a salt given as an integer SQL
+    expression (``_mix_decision(seed, decision)``). The salt is below
+    2**31, so the arithmetic is the same in INT or BIGINT."""
     x0 = f"pmod(CAST({key_sql} AS BIGINT), {_MINSTD_M})"
-    x1 = f"pmod({x0} * {_MINSTD_A} + {d}, {_MINSTD_M})"
+    x1 = f"pmod({x0} * {_MINSTD_A} + {salt_sql}, {_MINSTD_M})"
     x2 = f"pmod({x1} * {_MINSTD_A}, {_MINSTD_M})"
     return f"(CAST({x2} AS DOUBLE) / {float(_MINSTD_M)!r}D)"
 
@@ -134,6 +148,15 @@ def portable_u01_spark_sql(key_sql: str, seed: int, decision: str) -> str:
 # Each Column draw factory's SQL-text twin. The noise operators build
 # their expressions as text and take either form of ``u01``.
 _SQL_TWINS = {hash_u01: hash_u01_sql, portable_u01: portable_u01_spark_sql}
+# Each text twin's salt-as-SQL form: how it folds (seed, decision) into
+# one integer salt, and its draw over a salt given as SQL. An operator
+# whose decision varies per element (write_wrong_digits' per-position
+# draws inside one lambda) picks the salt from a literal array and
+# writes one expression for both twins.
+_SALTED_TWINS = {
+    hash_u01_sql: (fold_salt64, hash_u01_salted_sql),
+    portable_u01_spark_sql: (_mix_decision, portable_u01_salted_sql),
+}
 
 
 def u01_sql(u01):
@@ -145,6 +168,15 @@ def u01_sql(u01):
         return _SQL_TWINS[u01]
     except KeyError:
         raise TypeError(f"no SQL-text twin for draw factory {u01!r}") from None
+
+
+def salted_u01_sql(u01):
+    """``(salt, draw)`` for the draw factory ``u01`` (either form):
+    ``salt(seed, decision)`` is the integer salt and
+    ``draw(key_sql, salt_sql)`` the draw over a salt given as SQL, so
+    ``draw(key, str(salt(seed, decision)))`` equals
+    ``u01_sql(u01)(key, seed, decision)`` bit for bit."""
+    return _SALTED_TWINS[u01_sql(u01)]
 
 
 def portable_u01_py(key: int, seed: int, decision: str) -> float:

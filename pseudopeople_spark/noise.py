@@ -6,8 +6,12 @@ reference's fixed declaration order (reference ``noise_dataset``,
 The whole pipeline composes into ONE Spark plan: row noise = hash
 filters (+ one join for guardian duplication), column noise = a few
 projection rounds of ``CASE WHEN mask THEN noised ELSE col END`` —
-Catalyst fuses them into a single whole-stage-codegen'd map, so N noise
-operators cost one pass over the data regardless of N.
+Catalyst pipelines them into a few projections of one stage, so N noise
+operators cost one pass over the data regardless of N. Each
+whole-stage-codegen piece must stay under HotSpot's 8,000-byte JIT
+limit, or its rows run in the bytecode interpreter
+(``plans.inspect.codegen_method_bytes``; ``column_noise.write_wrong_digits_sql``
+says how the census stage was brought under it).
 
 The plan is built as SQL text in pure Python (``column_noise.*_sql``,
 ``crn.hash_u01_sql``): round k hands Spark one ``F.expr`` per column
@@ -34,9 +38,6 @@ from pseudopeople_spark.operators.kernels import apply_token_noise_all_columns
 from pseudopeople_spark.operators.sqltext import ident, string
 
 OVERSAMPLED_DATASETS = {"american_community_survey", "current_population_survey"}
-# column-noise builders that cast back to the column's type (they take
-# ``dtype``)
-_TYPED = (cn.leave_blank_sql, cn.copy_from_household_member_sql, cn.misreport_age_sql)
 
 
 def noise_dataset(
@@ -105,7 +106,8 @@ def noise_dataset(
     # Streaming plans cannot host an unwatermarked global aggregate, so
     # streams apply p to eligible cells directly (documented,
     # conservative).
-    present = set(df.columns)
+    dtypes = dict(df.dtypes)
+    present = set(dtypes)
     prop_aggs = []
     prop_cols: "dict[tuple[str, str], str]" = {}
     if scale_by_eligibility and not df.isStreaming:
@@ -117,7 +119,7 @@ def noise_dataset(
             if col.name not in present:
                 continue
             c = ident(col.name)
-            notna = f"({c} IS NOT NULL AND CAST({c} AS STRING) != '')"
+            notna = f"({c} IS NOT NULL AND {cn.as_string(col.name, dtypes[col.name])} != '')"
             if (
                 D.COPY_FROM_HOUSEHOLD_MEMBER in c_cfg
                 and c_cfg[D.COPY_FROM_HOUSEHOLD_MEMBER].get("cell_probability", 0.0) > 0
@@ -145,8 +147,8 @@ def noise_dataset(
     # (each reads only its own column, the key, and never-noised shadow
     # / proportion / join columns), so the rounds reproduce the
     # declaration-order plan value for value, while the plan build makes
-    # O(columns) JVM calls. Catalyst fuses the rounds' projections into
-    # one whole-stage-codegen'd map, as it did the per-operator chain.
+    # O(columns) JVM calls. Catalyst collapses the rounds' projections
+    # as it did the per-operator chain.
     #
     # Token noise (phonetic/OCR/typos) is collected across ALL columns
     # and applied through ONE pandas UDF at the end — token ops are the
@@ -209,17 +211,15 @@ def noise_dataset(
         if token_plan:
             all_token_plans.append((col.name, token_plan))
     for round_ops in rounds:
-        # builders that cast back to the column's type read it as of
-        # the previous round
+        # every builder reads the column's type as of the previous round
+        # (to cast back to it, or to skip casting a STRING to STRING)
         dtypes = dict(df.dtypes)
         exprs = {}
         for column, (build, kwargs) in round_ops.items():
             if build is cn.use_nickname_sql:
                 # the nickname set joins on the value as of this round
                 df, kwargs["arr_col"] = cn.nickname_join(df, column, assets.NICKNAMES)
-            if build in _TYPED:
-                kwargs["dtype"] = dtypes[column]
-            exprs[column] = F.expr(build(column, crn_key, **kwargs))
+            exprs[column] = F.expr(build(column, crn_key, dtype=dtypes[column], **kwargs))
         df = df.withColumns(exprs)
     if all_token_plans:
         df = apply_token_noise_all_columns(df, all_token_plans, crn_key, seed=seed)

@@ -12,9 +12,10 @@ Shared driver contract (reference ``ColumnNoiseType.__call__``):
 
 Spark realization: each operator is a ``*_sql`` builder that writes the
 column's new value as Spark SQL text in pure Python,
-``CASE WHEN <mask> THEN <noised> ELSE <column> END`` — fully codegen'd
-JVM expressions, no UDF, no shuffle. Text costs Spark ONE parse per
-column; the equivalent ``F.*`` Column tree costs one Py4J round trip
+``CASE WHEN <mask> THEN <noised> ELSE <column> END`` — JVM expressions,
+no UDF, no shuffle, all whole-stage codegen'd except the lambda of
+``write_wrong_digits_sql`` (its docstring says why). Text costs Spark
+ONE parse per column; the equivalent ``F.*`` Column tree costs one Py4J round trip
 (plus PySpark's call-site capture) per expression node, which made the
 census plan build ~31k round trips and several seconds before any row
 moved. ``noise.noise_dataset`` applies one operator round of every
@@ -36,15 +37,24 @@ queries) and use their SQL-text twins.
 
 from __future__ import annotations
 
+import hashlib
 from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pseudopeople_spark.crn import hash_u01_sql, u01_sql
-from pseudopeople_spark.operators.sqltext import double, ident, string, string_array
+from pseudopeople_spark.crn import hash_u01_sql, salted_u01_sql, u01_sql
+from pseudopeople_spark.operators.sqltext import double, ident, string_array
 
 U01Sql = Callable[[str, int, str], str]
+
+
+def as_string(column: str, dtype: "str | None") -> str:
+    """``column`` as STRING text: a cast only when ``dtype`` (the
+    column's ``df.dtypes`` name; None when unknown) is not already
+    STRING. Every cast node is analyzer work at plan build."""
+    c = ident(column)
+    return c if dtype == "string" else f"CAST({c} AS STRING)"
 
 
 def _base_mask(
@@ -55,9 +65,9 @@ def _base_mask(
     decision: str,
     u01: U01Sql,
     required: Sequence[str] = (),
+    dtype: "str | None" = None,
 ) -> str:
-    c = ident(column)
-    eligible = f"({c} IS NOT NULL AND CAST({c} AS STRING) != '')"
+    eligible = f"({ident(column)} IS NOT NULL AND {as_string(column, dtype)} != '')"
     for r in required:
         eligible = f"({eligible} AND {ident(r)} IS NOT NULL)"
     return f"({eligible} AND {u01(ident(key), seed, decision)} < {p})"
@@ -127,7 +137,7 @@ def leave_blank_sql(
     """Selected cells -> NULL (reference ``leave_blanks``,
     noise_functions.py:657-672). Spark nulls are native; no float
     promotion hack (output_dtype_getters.py:6-11) is needed."""
-    mask = _base_mask(column, key, double(p), seed, f"leave_blank_{column}", u01)
+    mask = _base_mask(column, key, double(p), seed, f"leave_blank_{column}", u01, dtype=dtype)
     return _case(column, mask, f"CAST(NULL AS {dtype})")
 
 
@@ -138,7 +148,13 @@ def leave_blank(
 
 
 def choose_wrong_option_sql(
-    column: str, key: str, options: Sequence[str], p: float, seed: int, u01: U01Sql = hash_u01_sql
+    column: str,
+    key: str,
+    options: Sequence[str],
+    p: float,
+    seed: int,
+    u01: U01Sql = hash_u01_sql,
+    dtype: "str | None" = None,
 ) -> str:
     """Replace with a uniform draw from the column's option list
     (reference ``choose_wrong_options``, noise_functions.py:306-341).
@@ -147,7 +163,7 @@ def choose_wrong_option_sql(
     (noise_scaling.py:10-23)."""
     n = len(options)
     p_scaled = min(1.0, p / (1.0 - 1.0 / n)) if n > 1 else p
-    mask = _base_mask(column, key, double(p_scaled), seed, f"choose_wrong_option_{column}", u01)
+    mask = _base_mask(column, key, double(p_scaled), seed, f"choose_wrong_option_{column}", u01, dtype=dtype)
     u_pick = u01(ident(key), seed, f"choose_wrong_option_pick_{column}")
     return _case(column, mask, _uniform_pick(options, u_pick))
 
@@ -183,7 +199,7 @@ def copy_from_household_member_sql(
     the overall change rate stays at p (noise_scaling.py:37-45)."""
     mask = _base_mask(
         column, key, _scaled_p(p, proportion_col), seed, f"copy_from_household_member_{column}", u01,
-        required=[copy_column],
+        required=[copy_column], dtype=dtype,
     )
     return _case(column, mask, f"CAST({ident(copy_column)} AS {dtype})")
 
@@ -204,7 +220,13 @@ def copy_from_household_member(
 
 
 def swap_month_and_day_sql(
-    column: str, key: str, date_format: str, p: float, seed: int, u01: U01Sql = hash_u01_sql
+    column: str,
+    key: str,
+    date_format: str,
+    p: float,
+    seed: int,
+    u01: U01Sql = hash_u01_sql,
+    dtype: "str | None" = None,
 ) -> str:
     """String-slice swap of the month and day segments of an already
     stringified date (reference ``swap_months_and_days``,
@@ -219,7 +241,7 @@ def swap_month_and_day_sql(
         swapped = f"concat(substr({c}, 1, 4), substr({c}, 7, 2), substr({c}, 5, 2))"
     else:
         raise ValueError(f"unsupported date format {date_format}")
-    mask = _base_mask(column, key, double(p), seed, f"swap_month_and_day_{column}", u01)
+    mask = _base_mask(column, key, double(p), seed, f"swap_month_and_day_{column}", u01, dtype=dtype)
     return _case(column, mask, swapped)
 
 
@@ -242,6 +264,7 @@ def write_wrong_zipcode_digits_sql(
     seed: int,
     digit_probabilities: Sequence[float] = (0.04, 0.04, 0.2, 0.36, 0.36),
     u01: U01Sql = hash_u01_sql,
+    dtype: "str | None" = None,
 ) -> str:
     """Per-digit replacement of a 5-digit zip: cell selected w.p. p,
     then digit i replaced w.p. digit_probabilities[i] scaled by
@@ -249,7 +272,7 @@ def write_wrong_zipcode_digits_sql(
     (reference noise_functions.py:407-459; default position
     probabilities noise_entities.py:63-65). Five chained built-in
     expressions — no UDF."""
-    mask = _base_mask(column, key, double(p), seed, f"write_wrong_zipcode_{column}", u01)
+    mask = _base_mask(column, key, double(p), seed, f"write_wrong_zipcode_{column}", u01, dtype=dtype)
     c, k = ident(column), ident(key)
     parts = []
     for i, dp in enumerate(digit_probabilities):
@@ -291,7 +314,7 @@ def misreport_age_sql(
     equal to the original (impossible with the default diffs, possible
     after reflection) decrements by 1. CDF chain == searchsorted."""
     diffs = age_differences or {-2: 0.1, -1: 0.4, 1: 0.4, 2: 0.1}
-    mask = _base_mask(column, key, double(p), seed, f"misreport_age_{column}", u01)
+    mask = _base_mask(column, key, double(p), seed, f"misreport_age_{column}", u01, dtype=dtype)
     u_pick = u01(ident(key), seed, f"misreport_age_pick_{column}")
     cdf = 0.0
     whens = []
@@ -328,32 +351,55 @@ def write_wrong_digits_sql(
     token_probability: float = 0.1,
     u01: U01Sql = hash_u01_sql,
     max_len: int = 16,
+    dtype: "str | None" = None,
 ) -> str:
     """Each numeric character of a selected cell is replaced w.p.
     token_probability/0.9 (self-collision scaling) by a uniform random
     digit; non-digit characters pass through (reference
-    ``write_wrong_digits``, noise_functions.py:497-552).
+    ``write_wrong_digits``, noise_functions.py:497-552). Characters past
+    ``max_len`` (identity columns are short) pass through unchanged.
 
-    Spark realization: an UNROLLED per-position expression chain up to
-    ``max_len`` characters (identity columns are short). Deliberately
-    not ``transform()``: higher-order functions don't participate in
-    whole-stage codegen, and one non-codegen expression de-optimizes the
-    entire fused projection — the unrolled chain keeps the stage inside
-    WholeStageCodegen (measured ~3x on the full noise plan). The
-    per-position draws go through the pluggable ``u01`` with decision
-    tags ``wwd_{column}_{i}`` / ``wwd_digit_{column}_{i}`` so the
-    DuckDB oracle can replay them through the portable CRN."""
+    Spark realization: ONE lambda over the positions of a selected cell,
+    ``transform(sequence(1, least(length(c), max_len)), i -> ...)``
+    joined back with ``array_join``, in the CASE's noised branch — it
+    runs only for the ~p of selected cells. Each position draws twice
+    through the pluggable ``u01`` with decision tags
+    ``wwd_{column}_{i}`` / ``wwd_digit_{column}_{i}`` (the DuckDB oracle
+    replays them through the portable CRN); the lambda picks position
+    i's salts from two literal BIGINT arrays (``crn.salted_u01_sql``),
+    so every draw equals the one an unrolled chain makes.
+
+    Why a lambda and not the unrolled 16-position chain this replaced:
+    a higher-order function is not whole-stage codegen'd, so the round
+    that carries it leaves the fused noise stage. That was once a loss
+    (one interpreted expression de-optimized the whole fused
+    projection), but the fused stage had since grown to a 41,680-byte
+    ``processNext`` — the unrolled chains were ~26 KB of it — and
+    HotSpot never JIT-compiles a method over 8,000 bytes, so every row
+    ran in the bytecode interpreter. With the lambda every census
+    codegen stage fits the JIT (``plans.inspect.codegen_method_bytes``)
+    and a warm 200k-row census evaluation takes a third less time
+    (5.9 -> 3.8 s median on 4 cores)."""
     tp = double(min(1.0, token_probability / 0.9))
-    mask = _base_mask(column, key, double(p), seed, f"write_wrong_digits_{column}", u01)
-    k = ident(key)
-    c = f"CAST({ident(column)} AS STRING)"
-    parts = []
-    for i in range(max_len):
-        ch = f"substr({c}, {i + 1}, 1)"
-        u_sel = u01(k, seed, f"wwd_{column}_{i}")
-        dig = f"CAST(floor({u01(k, seed, f'wwd_digit_{column}_{i}')} * 10) AS STRING)"
-        parts.append(f"CASE WHEN {ch} >= '0' AND {ch} <= '9' AND {u_sel} < {tp} THEN {dig} ELSE {ch} END")
-    noised = f"concat(concat({', '.join(parts)}), substring({c}, {max_len + 1}, 1000000))"
+    mask = _base_mask(column, key, double(p), seed, f"write_wrong_digits_{column}", u01, dtype=dtype)
+    salt, draw = salted_u01_sql(u01)
+    k, c, i = ident(key), as_string(column, dtype), "__wwd_i"
+
+    def salts(tag: str) -> str:
+        return "array(" + ", ".join(f"{salt(seed, f'{tag}_{column}_{j}')}L" for j in range(max_len)) + ")"
+
+    ch = f"substr({c}, {i}, 1)"
+    u_sel = draw(k, f"element_at({salts('wwd')}, {i})")
+    u_dig = draw(k, f"element_at({salts('wwd_digit')}, {i})")
+    dig = f"CAST(floor({u_dig} * 10) AS STRING)"
+    body = f"CASE WHEN {ch} >= '0' AND {ch} <= '9' AND {u_sel} < {tp} THEN {dig} ELSE {ch} END"
+    # the mask admits only non-empty cells, so the sequence never runs
+    # down from 1 to 0
+    positions = f"sequence(1, least(length({c}), {max_len}))"
+    noised = (
+        f"concat(array_join(transform({positions}, {i} -> {body}), ''), "
+        f"substring({c}, {max_len + 1}, 1000000))"
+    )
     return _case(column, mask, noised)
 
 
@@ -376,6 +422,18 @@ def _nick_cols(column: str) -> "tuple[str, str]":
     return f"__nick_name_{column}", f"__nick_arr_{column}"
 
 
+def _nickname_table(spark: SparkSession, nicknames: "dict[str, Sequence[str]]") -> DataFrame:
+    """The nickname table as a temporary view of ``spark``, named by a
+    digest of its contents: createDataFrame of the 1,080-row table
+    costs 60-90 ms and a noise build joins it once per nickname column
+    (six in taxes_1040), so each session makes it once."""
+    rows = [(name, list(nicks)) for name, nicks in nicknames.items()]
+    view = "__nicknames_" + hashlib.sha1(repr(rows).encode()).hexdigest()[:16]
+    if not spark.catalog.tableExists(view):
+        spark.createDataFrame(rows, "name string, nicknames array<string>").createOrReplaceTempView(view)
+    return spark.table(view)
+
+
 def nickname_join(df: DataFrame, column: str, nicknames: "dict[str, Sequence[str]]") -> "tuple[DataFrame, str]":
     """Left-join each row's nickname set for ``column``'s CURRENT value;
     returns the joined frame and the name of the added array column.
@@ -385,10 +443,9 @@ def nickname_join(df: DataFrame, column: str, nicknames: "dict[str, Sequence[str
     The join columns are named per target column, so several name
     columns can be joined before one projection round."""
     name_col, arr_col = _nick_cols(column)
-    rows = [(name, list(nicks)) for name, nicks in nicknames.items()]
-    nick_df = F.broadcast(
-        df.sparkSession.createDataFrame(rows, f"{ident(name_col)} string, {ident(arr_col)} array<string>")
-    )
+    nick_df = F.broadcast(_nickname_table(df.sparkSession, nicknames).selectExpr(
+        f"name AS {ident(name_col)}", f"nicknames AS {ident(arr_col)}"
+    ))
     return df.join(nick_df, F.col(column) == F.col(name_col), "left"), arr_col
 
 
@@ -400,6 +457,7 @@ def use_nickname_sql(
     seed: int,
     u01: U01Sql = hash_u01_sql,
     proportion_col: "str | None" = None,
+    dtype: "str | None" = None,
 ) -> str:
     """Names with a known nickname set (``arr_col``, from
     :func:`nickname_join`) are replaced by a uniform nickname choice
@@ -408,7 +466,9 @@ def use_nickname_sql(
     noise.noise_dataset) applies the 1/proportion-have-nickname scaling
     (noise_scaling.py:26-34)."""
     arr = ident(arr_col)
-    base = _base_mask(column, key, _scaled_p(p, proportion_col), seed, f"use_nickname_{column}", u01)
+    base = _base_mask(
+        column, key, _scaled_p(p, proportion_col), seed, f"use_nickname_{column}", u01, dtype=dtype
+    )
     mask = f"({base} AND {arr} IS NOT NULL)"
     u_pick = u01(ident(key), seed, f"use_nickname_pick_{column}")
     return _case(column, mask, f"element_at({arr}, CAST(floor({u_pick} * size({arr})) + 1 AS INT))")
@@ -430,13 +490,19 @@ def use_nickname(
 
 
 def use_fake_name_sql(
-    column: str, key: str, fake_names: Sequence[str], p: float, seed: int, u01: U01Sql = hash_u01_sql
+    column: str,
+    key: str,
+    fake_names: Sequence[str],
+    p: float,
+    seed: int,
+    u01: U01Sql = hash_u01_sql,
+    dtype: "str | None" = None,
 ) -> str:
     """Replace with a uniform draw from a fake/placeholder name list
     (reference ``use_fake_names``, noise_functions.py:585-626; lists in
     data/fake_names.py). The pick indexes one foldable array literal —
     no per-row array construction, O(1) generated code."""
-    mask = _base_mask(column, key, double(p), seed, f"use_fake_name_{column}", u01)
+    mask = _base_mask(column, key, double(p), seed, f"use_fake_name_{column}", u01, dtype=dtype)
     u_pick = u01(ident(key), seed, f"use_fake_name_pick_{column}")
     return _case(column, mask, _uniform_pick(fake_names, u_pick))
 

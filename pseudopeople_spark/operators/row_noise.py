@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pseudopeople_spark.crn import hash_u01_sql, u01_sql
-from pseudopeople_spark.operators.sqltext import double, ident, string
+from pseudopeople_spark.operators.sqltext import double, ident, string, string_array
 
 # Demographic non-response model constants — the reference's published
 # values (constants/data_values.py:8-45): base + race additive +
@@ -54,6 +54,16 @@ DNR_DEFAULT_LEVELS: "dict[str, float]" = {
 }
 
 
+def _lookup(table: "dict[str, object]", key_sql: str, default_sql: str, literal) -> str:
+    """``table[key]`` as one lookup in literal arrays (``default_sql``
+    for any other key or NULL): O(1) generated code, where a CASE chain
+    grows by a branch per entry and compares the key once per branch.
+    ``literal`` writes a value as SQL text."""
+    keys = string_array(table)
+    values = ", ".join([default_sql] + [literal(v) for v in table.values()])
+    return f"element_at(array({values}), CAST(coalesce(array_position({keys}, {key_sql}), 0) AS INT) + 1)"
+
+
 def omit_rows(
     df: DataFrame, key_col: str, p: float = 0.005, seed: int = 0, u01=hash_u01_sql
 ) -> DataFrame:
@@ -61,6 +71,49 @@ def omit_rows(
     noise_functions.py:33-59). Key-deterministic hash filter — a single
     columnar pass, no shuffle."""
     return df.where(f"{u01_sql(u01)(ident(key_col), seed, 'omit_row')} >= {double(p)}")
+
+
+def do_not_respond_probability_sql(
+    configured_level: float = DNR_DEFAULT_LEVEL,
+    default_level: float = DNR_DEFAULT_LEVEL,
+    sex_col: str = "sex",
+    age_col: str = "age",
+    race_col: str = "race_ethnicity",
+    oversample_adjust: bool = False,
+    cps_additive: float = 0.0,
+) -> str:
+    """SQL text of :func:`do_not_respond`'s per-row non-response
+    probability. The race and sex×age additives are two lookups in
+    literal arrays: the reference's pd.cut age-binning becomes an index
+    with one array slot per (sex, age), so ``age`` is cast once per row.
+    (The CASE chains this replaced cast it 24 times per row and made
+    this filter, which every row passes, the largest part of a codegen
+    stage too big for the JIT.)"""
+    race_adj = _lookup(DNR_RACE_ADJ, ident(race_col), "0.0D", double)
+    sexes = list(dict.fromkeys(sx for sx, _, _, _ in DNR_SEX_AGE_ADJ))
+    lo = min(b[1] for b in DNR_SEX_AGE_ADJ)
+    hi = max(b[2] for b in DNR_SEX_AGE_ADJ)
+    # per sex slot (0: any other sex or NULL): one slot below lo, one per
+    # age in [lo, hi), one at or above hi (NULL ages land below lo)
+    width = hi - lo + 2
+    table = [0.0] * ((len(sexes) + 1) * width)
+    for sx, a_lo, a_hi, adj in DNR_SEX_AGE_ADJ:
+        base = (sexes.index(sx) + 1) * width + 1
+        for a in range(a_lo, a_hi):
+            table[base + a - lo] = adj
+    sex_slot = f"coalesce(array_position({string_array(sexes)}, {ident(sex_col)}), 0)"
+    age_slot = f"least(greatest(CAST({ident(age_col)} AS BIGINT), {lo - 1}), {hi}) + {1 - lo}"
+    sexage_adj = (
+        f"element_at(array({', '.join(double(x) for x in table)}), "
+        f"CAST({sex_slot} * {width} + {age_slot} + 1 AS INT))"
+    )
+    p = f"least(greatest({double(DNR_BASE)} + {race_adj} + {sexage_adj}, 0.0D), 1.0D)"
+    if cps_additive:
+        p = f"({p} + {double(cps_additive)})"
+    p = f"({p} * {double(configured_level / default_level)})"
+    if oversample_adjust:
+        p = f"(0.5D + {p} / 2)"
+    return f"least({p}, 1.0D)"
 
 
 def do_not_respond(
@@ -80,28 +133,13 @@ def do_not_respond(
     noise_functions.py:99-142): per-row probability = clip_[0,1](base +
     race additive + sex×age-bin additive) [+ 0.276 for CPS], scaled by
     configured/default (default 0.0145 census/ACS, 0.2905 CPS); then the
-    ACS/CPS oversampling transform 0.5 + p/2. Realized as nested
-    CASE chains over the tiny lookup tables — pure JVM expressions, no
-    join needed (the reference's pd.cut age-binning collapses to a CASE
-    chain)."""
-    race = ident(race_col)
-    race_expr = "0.0D"
-    for r, adj in DNR_RACE_ADJ.items():
-        race_expr = f"CASE WHEN {race} = {string(r)} THEN {double(adj)} ELSE {race_expr} END"
-    sex, age = ident(sex_col), f"CAST({ident(age_col)} AS BIGINT)"
-    sexage_expr = "0.0D"
-    for sx, lo, hi, adj in DNR_SEX_AGE_ADJ:
-        sexage_expr = (
-            f"CASE WHEN {sex} = {string(sx)} AND {age} >= {lo} AND {age} < {hi} "
-            f"THEN {double(adj)} ELSE {sexage_expr} END"
-        )
-    p = f"least(greatest({double(DNR_BASE)} + ({race_expr}) + ({sexage_expr}), 0.0D), 1.0D)"
-    if cps_additive:
-        p = f"({p} + {double(cps_additive)})"
-    p = f"({p} * {double(configured_level / default_level)})"
-    if oversample_adjust:
-        p = f"(0.5D + {p} / 2)"
-    return df.where(f"{u01_sql(u01)(ident(key_col), seed, 'do_not_respond')} >= least({p}, 1.0D)")
+    ACS/CPS oversampling transform 0.5 + p/2
+    (:func:`do_not_respond_probability_sql`). Pure JVM expressions, no
+    join needed."""
+    p = do_not_respond_probability_sql(
+        configured_level, default_level, sex_col, age_col, race_col, oversample_adjust, cps_additive
+    )
+    return df.where(f"{u01_sql(u01)(ident(key_col), seed, 'do_not_respond')} >= {p}")
 
 
 def duplicate_rows(
@@ -287,9 +325,7 @@ def duplicate_with_guardian(
     for c in cols:
         if c == relationship_col:
             src_housing = copied(housing_col) if housing_col in copy_cols else housing
-            remap = "CAST(NULL AS STRING)"
-            for ht, rel in HOUSING_TYPE_RELATIONSHIP_MAP.items():
-                remap = f"CASE WHEN {src_housing} = {string(ht)} THEN {string(rel)} ELSE {remap} END"
+            remap = _lookup(HOUSING_TYPE_RELATIONSHIP_MAP, src_housing, "CAST(NULL AS STRING)", string)
             dup_cols.append(f"{remap} AS {ident(c)}")
         elif c in copy_cols:
             dup_cols.append(f"{copied(c)} AS {ident(c)}")

@@ -6,6 +6,7 @@ selected, seed sensitivity."""
 import pytest
 from pyspark.sql import functions as F
 
+from pseudopeople_spark.crn import hash_u01, portable_u01, u01_sql
 from pseudopeople_spark.operators import column_noise as cn
 from tests.conftest import assert_proportion
 
@@ -115,6 +116,46 @@ def test_write_wrong_digits(spark):
     ).collect()[0]["c"]
     # each digit replaced w.p. (0.3/0.9) * (9/10 actually-different) = 0.3
     assert_proportion(changed_chars, N * 9, 0.3, "write_wrong_digits per-char", slack_sigmas=6)
+
+
+def _unrolled_write_wrong_digits_sql(column, key, p, seed, token_probability, u01, max_len=16):
+    """The reference for write_wrong_digits_sql's draws: the chain of
+    ``max_len`` unrolled positions (two draws each) it was written as
+    before the positions became one lambda."""
+    tp = repr(min(1.0, token_probability / 0.9)) + "D"
+    c, k = f"CAST(`{column}` AS STRING)", f"`{key}`"
+    mask = f"(`{column}` IS NOT NULL AND {c} != '' AND {u01(k, seed, f'write_wrong_digits_{column}')} < {p!r}D)"
+    parts = []
+    for i in range(max_len):
+        ch = f"substr({c}, {i + 1}, 1)"
+        u_sel = u01(k, seed, f"wwd_{column}_{i}")
+        dig = f"CAST(floor({u01(k, seed, f'wwd_digit_{column}_{i}')} * 10) AS STRING)"
+        parts.append(f"CASE WHEN {ch} >= '0' AND {ch} <= '9' AND {u_sel} < {tp} THEN {dig} ELSE {ch} END")
+    noised = f"concat(concat({', '.join(parts)}), substring({c}, {max_len + 1}, 1000000))"
+    return f"CASE WHEN {mask} THEN {noised} ELSE `{column}` END"
+
+
+@pytest.mark.parametrize("u01", [hash_u01, portable_u01])
+def test_write_wrong_digits_matches_unrolled_reference(spark, u01):
+    """The one-lambda write_wrong_digits draws exactly what the unrolled
+    16-position chain drew, with either draw twin: lengths 0-20, digits
+    and non-digits, non-ASCII (including non-ASCII digits, which are
+    never replaced), suffixes past position 16 and NULL."""
+    values = [None, "", "a-b", "12a-4 5", "ñ9ü8", "٣4٥6", "日本2024年", "x" * 17 + "9", "1234567890123456789"]
+    values += [("9876543210" * 2)[:n] for n in range(1, 21)]
+    rows = [(k * 100 + j, v) for k in range(40) for j, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "key bigint, v string")
+    for seed in (8, 123456):
+        got = cn.write_wrong_digits(df, "v", "key", p=1.0, token_probability=0.3, seed=seed, u01=u01)
+        want = df.withColumn(
+            "v", F.expr(_unrolled_write_wrong_digits_sql("v", "key", 1.0, seed, 0.3, u01_sql(u01)))
+        )
+        pairs = got.alias("g").join(want.alias("w"), "key").select("g.v", "w.v", F.col("key"))
+        assert pairs.count() == df.count()
+        mismatched = pairs.where(~F.col("g.v").eqNullSafe(F.col("w.v")))
+        assert mismatched.count() == 0, mismatched.limit(5).collect()
+        changed = got.alias("g").join(df.alias("d"), "key").where(F.col("g.v") != F.col("d.v")).count()
+        assert changed > df.count() // 4
 
 
 def test_use_nickname_and_fake_name(spark):

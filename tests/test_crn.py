@@ -10,10 +10,12 @@ import pytest
 
 from pseudopeople_spark.crn import (
     hash_u01,
+    hash_u01_salted_sql,
     hash_u01_sql,
     portable_u01,
     portable_u01_spark_sql,
     portable_u01_sql,
+    salted_u01_sql,
     splitmix64_u01,
     u01_sql,
 )
@@ -84,3 +86,30 @@ def test_splitmix64_u01_vectorized_stateless():
     u2 = splitmix64_u01([keys, np.uint64(3), np.uint64(9)])
     assert (u == u2).all()
     assert abs(u.mean() - 0.5) < 0.05
+
+
+@pytest.mark.parametrize("factory", [hash_u01, portable_u01_spark_sql])
+def test_salted_form_draws_bit_identical(spark, factory):
+    """The salt-as-SQL form over a BIGINT literal salt (as
+    write_wrong_digits picks it from a literal array) draws what the
+    text twin draws."""
+    salt, draw = salted_u01_sql(factory)
+    text_form = u01_sql(factory)
+    keys = spark.range(-1000, 1000) if text_form is hash_u01_sql else spark.range(0, 2000)
+    cols = []
+    for seed, decision in [(0, "wwd_ssn_0"), (7, "wwd_digit_ssn_15"), (2**40, "x")]:
+        cols += [
+            F.expr(text_form("id", seed, decision)),
+            F.expr(draw("id", f"element_at(array({salt(seed, decision)}L, 0L), 1)")),
+        ]
+    rows = keys.select(*cols).collect()
+    assert all(r[i] == r[i + 1] for r in rows for i in range(0, len(cols), 2))
+
+
+def test_min_bigint_salt_literal(spark):
+    """fold_salt64 can return -2**63; its BIGINT literal must parse."""
+    got = spark.range(3).select(
+        F.expr(hash_u01_salted_sql("id", f"{-(2**63)}L")).alias("a"),
+        F.expr(hash_u01_salted_sql("id", f"CAST({-(2**63)} AS BIGINT)")).alias("b"),
+    ).where("NOT (a <=> b)")
+    assert got.count() == 0

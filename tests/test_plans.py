@@ -8,6 +8,7 @@ from pseudopeople_spark import config, datasets as D, noise, synth
 from pseudopeople_spark.plans.inspect import (
     assert_broadcast_join,
     assert_pushed_filters,
+    codegen_method_bytes,
     count_python_eval_nodes,
     physical_plan,
 )
@@ -49,8 +50,30 @@ def test_noise_plan_single_arrow_crossing(spark):
     assert count_python_eval_nodes(noised) == 1
 
 
-# Py4J round trips of one census noise_dataset build: 1,003 measured in
-# a local[8] session, plus headroom. The plan is SQL text, so the count
+# HotSpot never JIT-compiles a method of more bytecode than this
+# (-XX:+DontCompileHugeMethods, the default): a codegen stage over it
+# runs every row in the bytecode interpreter.
+HUGE_METHOD_LIMIT = 8_000
+
+
+def test_noise_plan_fits_jit_limit(spark):
+    """Every whole-stage-codegen stage of the executed census noise plan
+    fits the JIT. The fused noise stage once reached a 41,680-byte
+    processNext (write_wrong_digits' unrolled positions were ~26 KB of
+    it) and the guardian-duplication branch, which every row passes
+    through, 9,845 bytes; both ran interpreted."""
+    # materialized first, as a noising job reads its extract: the stages
+    # then start at a scan, not at synth's record generation
+    census = synth.census_records(synth.simulants(spark, 100, seed=1), 2020).localCheckpoint()
+    noised = noise.noise_dataset(census, D.DECENNIAL_CENSUS, config.get_config(), seed=2)
+    noised.collect()
+    sizes = codegen_method_bytes(noised)
+    assert any("BroadcastNestedLoopJoin" in stage for stage, _ in sizes), sizes  # the main noise stage
+    assert all(size <= HUGE_METHOD_LIMIT for _, size in sizes), sizes
+
+
+# Py4J round trips of one census noise_dataset build: 977 measured in
+# a local[4] session, plus headroom. The plan is SQL text, so the count
 # scales with columns, not expression nodes; the Column-API build made
 # ~31k-38k. Memory commands are not counted: they release Java
 # references of earlier objects as Python's collector finalizes them

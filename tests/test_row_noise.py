@@ -177,3 +177,60 @@ def test_cps_additive_and_oversample(spark):
     ).count()
     expected = 0.5 + (0.0024 - 0.0188 + 0.0281 + 0.276) / 2
     assert_proportion(n - kept, n, expected, "cps oversampled dnr", slack_sigmas=6)
+
+
+def _case_chain(table: dict, key_sql: str, default_sql: str, literal) -> str:
+    out = default_sql
+    for k, v in table.items():
+        out = f"CASE WHEN {key_sql} = '{k}' THEN {literal(v)} ELSE {out} END"
+    return out
+
+
+def test_do_not_respond_probability_matches_case_chains(spark):
+    """The array-lookup non-response probability equals, bit for bit,
+    the per-entry CASE chains it replaced, over every race, sex and age
+    from below the first bin to above the last, unknown values and
+    NULLs, for the census and the CPS (additive + oversampled) forms."""
+    races = [*rn.DNR_RACE_ADJ, "Other", None]
+    sexes = ["Female", "Male", "Other", None]
+    ages = [str(a) for a in range(-3, 131)] + [None]
+    rows = [(r, s, a) for r in races for s in sexes for a in ages]
+    df = spark.createDataFrame(rows, "race_ethnicity string, sex string, age string")
+
+    def dbl(x):
+        return f"{x!r}D"
+
+    race_ref = _case_chain(rn.DNR_RACE_ADJ, "race_ethnicity", "0.0D", dbl)
+    sexage_ref = "0.0D"
+    for sx, lo, hi, adj in rn.DNR_SEX_AGE_ADJ:
+        age = "CAST(age AS BIGINT)"
+        sexage_ref = f"CASE WHEN sex = '{sx}' AND {age} >= {lo} AND {age} < {hi} THEN {dbl(adj)} ELSE {sexage_ref} END"
+    base_ref = f"least(greatest({dbl(rn.DNR_BASE)} + ({race_ref}) + ({sexage_ref}), 0.0D), 1.0D)"
+    for kwargs, ref in [
+        ({}, f"least(({base_ref} * 1.0D), 1.0D)"),
+        (
+            dict(oversample_adjust=True, cps_additive=rn.CPS_NONRESPONSE_ADDITIVE),
+            f"least((0.5D + (({base_ref} + {dbl(rn.CPS_NONRESPONSE_ADDITIVE)}) * 1.0D) / 2), 1.0D)",
+        ),
+    ]:
+        got = df.select(
+            F.expr(rn.do_not_respond_probability_sql(**kwargs)).alias("got"), F.expr(ref).alias("want")
+        )
+        assert got.where("NOT (got <=> want)").count() == 0
+        assert got.where("got IS NULL").count() == 0
+        assert got.select("got").distinct().count() > 20
+
+
+def test_relationship_remap_lookup_matches_case_chain(spark):
+    housing = [*rn.HOUSING_TYPE_RELATIONSHIP_MAP, "Unknown", "", None]
+    df = spark.createDataFrame([(h,) for h in housing], "h string")
+
+    def lit(v):
+        return f"'{v}'"
+
+    got = df.select(
+        F.expr(rn._lookup(rn.HOUSING_TYPE_RELATIONSHIP_MAP, "h", "CAST(NULL AS STRING)", lit)).alias("got"),
+        F.expr(_case_chain(rn.HOUSING_TYPE_RELATIONSHIP_MAP, "h", "CAST(NULL AS STRING)", lit)).alias("want"),
+    )
+    assert got.where("NOT (got <=> want)").count() == 0
+    assert got.where("got IS NOT NULL").count() == len(rn.HOUSING_TYPE_RELATIONSHIP_MAP)
