@@ -18,15 +18,23 @@ AQE re-planning, and executor count.
 Three implementations, one contract:
 
 * :func:`hash_u01` — JVM-side ``xxhash64`` (whole-stage codegen'd, the
-  production path); :func:`hash_u01_sql` is its Spark SQL text.
+  production path); :func:`hash_u01_sql` is its Spark SQL text and
+  :func:`hash_u01_salted_sql` its form over a salt given as SQL and
+  extra key parts. The token noise draws of
+  ``column_noise.token_noise_sql`` use those parts:
+  ``xxhash64(salt, __crn64, position, tail)`` per scanned position.
+  :func:`xxhash64_py` / :func:`hash_u01_salted_py` / :func:`hash_u01_py`
+  are their pure-Python twins (Spark's ``XXH64.hashLong`` chained from
+  seed 42), so the Python token kernels can replay a JVM plan's draws
+  bit for bit.
 * :func:`portable_u01` / :func:`portable_u01_sql` — a Lehmer double-step
   LCG on an int64 key, expressible identically in Spark SQL *and* ANSI
   SQL (DuckDB). Used by the oracle-checked noise queries so the DuckDB
   oracle can replay the exact same draws; :func:`portable_u01_spark_sql`
   is its Spark SQL text.
-* :func:`splitmix64_u01` — numpy uint64 splitmix64 for per-(row, token)
-  draws inside Arrow pandas UDF kernels (token corruption), fully
-  vectorized, no per-row Generator objects.
+* :func:`splitmix64_u01` — numpy uint64 splitmix64, the default draws
+  of the Python token kernels (``operators.kernels``) and of the media
+  generator; fully vectorized, no per-row Generator objects.
 
 Each SQL-text twin also has a salt-as-SQL form (:func:`salted_u01_sql`)
 for draws whose decision is picked per element inside one expression.
@@ -54,9 +62,14 @@ def fold_salt64(seed: int | str, decision: str) -> int:
     every draw of every row; with ~60 draws/row in the census noise
     plan that was the single largest expression cost (measured 3.5x on
     a 40-draw microbench). Folding them driver-side leaves the per-row
-    work at one fixed-width hash."""
+    work at one fixed-width hash.
+
+    The seed is length-framed (``"<len>:<seed>|<decision>"``), so no two
+    (seed, decision) pairs fold the same text: unframed, seed ``'1|a'``
+    with decision ``'b'`` aliased seed ``'1'`` with decision ``'a|b'``."""
+    seed_text = str(seed)
     acc = 0xCBF29CE484222325
-    for ch in f"{seed}|{decision}":
+    for ch in f"{len(seed_text)}:{seed_text}|{decision}":
         acc = ((acc ^ ord(ch)) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
     return acc - 2**64 if acc >= 2**63 else acc
 
@@ -87,12 +100,66 @@ def hash_u01_sql(key_sql: str, seed: int | str, decision: str) -> str:
     return hash_u01_salted_sql(key_sql, f"CAST({fold_salt64(seed, decision)} AS BIGINT)")
 
 
-def hash_u01_salted_sql(key_sql: str, salt_sql: str) -> str:
+def hash_u01_salted_sql(key_sql: str, salt_sql: str, *parts_sql: str) -> str:
     """:func:`hash_u01_sql` over a salt given as a BIGINT SQL expression
     (``fold_salt64(seed, decision)`` as a literal, or picked from an
     array of such literals). xxhash64 hashes the salt's long value, so
-    the draw does not depend on where the salt comes from."""
-    return f"(CAST(pmod(xxhash64({salt_sql}, {key_sql}), {2**40}L) AS DOUBLE) / {_TWO40!r}D)"
+    the draw does not depend on where the salt comes from. ``parts_sql``
+    (BIGINT expressions) extend the key: the token scans draw per
+    (record, position, token length) as ``xxhash64(salt, key, pos, tail)``.
+    :func:`hash_u01_salted_py` is the Python twin."""
+    args = ", ".join((salt_sql, key_sql, *parts_sql))
+    return f"(CAST(pmod(xxhash64({args}), {2**40}L) AS DOUBLE) / {_TWO40!r}D)"
+
+
+# --------------------------------------------------------------------------
+# Python twin of Spark's xxhash64 over BIGINT arguments
+# --------------------------------------------------------------------------
+
+_M64 = (1 << 64) - 1
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_XXH_SEED = 42  # Spark's XxHash64 expression seed
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_long(value: int, seed: int) -> int:
+    """``XXH64.hashLong(value, seed)`` of Spark's catalyst, mod 2**64."""
+    h = (seed + _XXH_P5 + 8) & _M64
+    h ^= (_rotl64((value * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+    h = (_rotl64(h, 27) * _XXH_P1 + _XXH_P4) & _M64
+    h ^= h >> 33
+    h = (h * _XXH_P2) & _M64
+    h ^= h >> 29
+    h = (h * _XXH_P3) & _M64
+    return h ^ (h >> 32)
+
+
+def xxhash64_py(*values: int) -> int:
+    """Spark's ``xxhash64(v1, v2, ...)`` over BIGINT arguments, as a
+    signed int64: seed 42, each argument hashed with the running hash
+    as its seed. Lets a Python kernel draw exactly what a JVM plan
+    draws (``tests/test_crn.py`` checks it against Spark)."""
+    h = _XXH_SEED
+    for v in values:
+        h = _xxh64_long(int(v) & _M64, h)
+    return h - 2**64 if h >= 2**63 else h
+
+
+def hash_u01_salted_py(salt: int, key: int, *parts: int) -> float:
+    """Python twin of :func:`hash_u01_salted_sql` over integer arguments."""
+    return (xxhash64_py(salt, key, *parts) % 2**40) / _TWO40
+
+
+def hash_u01_py(key: int, seed: int | str, decision: str) -> float:
+    """Python twin of :func:`hash_u01` for an int64 key."""
+    return hash_u01_salted_py(fold_salt64(seed, decision), key)
 
 
 def _mix_decision(seed: int, decision: str) -> int:

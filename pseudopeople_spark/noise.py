@@ -21,6 +21,15 @@ not with the number of expression nodes — the Column-API build made
 ~31k Py4J round trips for one census plan (each ``F.*`` call also pays
 PySpark's call-site capture) and cost more than a warm evaluation of
 200k rows.
+
+No noise plan leaves the JVM. Token noise (phonetic, OCR, typos), the
+last operators of every name and address column, is one more pair of
+projections (``column_noise.token_noise``): JVM cell masks select the
+cells, and masked higher-order functions scan them, so only rows with a
+selected cell (~14 % of census rows at the default rates) leave
+generated code, and no row crosses into a Python worker (the pandas-UDF form shipped every token column of every row
+through Arrow, about a third of a warm census evaluation). The Python
+kernels in ``operators.kernels`` are the twin the tests check it against.
 """
 
 from __future__ import annotations
@@ -34,7 +43,6 @@ from pseudopeople_spark import datasets as D
 from pseudopeople_spark.operators import assets
 from pseudopeople_spark.operators import column_noise as cn
 from pseudopeople_spark.operators import row_noise as rn
-from pseudopeople_spark.operators.kernels import apply_token_noise_all_columns
 from pseudopeople_spark.operators.sqltext import ident, string
 
 OVERSAMPLED_DATASETS = {"american_community_survey", "current_population_survey"}
@@ -150,11 +158,11 @@ def noise_dataset(
     # O(columns) JVM calls. Catalyst collapses the rounds' projections
     # as it did the per-operator chain.
     #
-    # Token noise (phonetic/OCR/typos) is collected across ALL columns
-    # and applied through ONE pandas UDF at the end — token ops are the
-    # last ops in the per-column order and are column-local, so batching
-    # them after the built-in ops is semantics-preserving and costs a
-    # single Arrow crossing for the whole dataset.
+    # Token noise (phonetic/OCR/typos) comes last in every column's
+    # declared order and is column-local, so it is collected across ALL
+    # columns and applied after the rounds: ``cn.token_noise`` runs the
+    # three kinds in order behind JVM cell masks, in one expression
+    # shared by every token column. No noise plan has a Python node.
     rounds: "list[dict[str, tuple]]" = []
     all_token_plans: "list[tuple[str, list]]" = []
     for col in spec.columns:
@@ -199,11 +207,11 @@ def noise_dataset(
                 fakes = assets.FAKE_FIRST_NAMES if "first" in col.name or "middle" in col.name else assets.FAKE_LAST_NAMES
                 ops.append((cn.use_fake_name_sql, dict(kw, fake_names=fakes)))
             elif nt == D.MAKE_PHONETIC_ERRORS:
-                token_plan.append(("make_phonetic_errors", assets.PHONETIC_VARIANTS, p, tp))
+                token_plan.append((nt, assets.PHONETIC_VARIANTS, p, tp))
             elif nt == D.MAKE_OCR_ERRORS:
-                token_plan.append(("make_ocr_errors", assets.OCR_ERRORS, p, tp))
+                token_plan.append((nt, assets.OCR_ERRORS, p, tp))
             elif nt == D.MAKE_TYPOS:
-                token_plan.append(("make_typos", assets.QWERTY_NEIGHBORS, p, tp))
+                token_plan.append((nt, assets.QWERTY_NEIGHBORS, p, tp))
         for k, op in enumerate(ops):
             if k == len(rounds):
                 rounds.append({})
@@ -222,7 +230,7 @@ def noise_dataset(
             exprs[column] = F.expr(build(column, crn_key, dtype=dtypes[column], **kwargs))
         df = df.withColumns(exprs)
     if all_token_plans:
-        df = apply_token_noise_all_columns(df, all_token_plans, crn_key, seed=seed)
+        df = cn.token_noise(df, dict(all_token_plans), crn_key, seed=seed)
 
     # final projection to the declared output schema, declared order
     return df.select(key_col, *[c for c in spec.column_names if c in present])

@@ -38,13 +38,21 @@ queries) and use their SQL-text twins.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Sequence
+from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pseudopeople_spark.crn import hash_u01_sql, salted_u01_sql, u01_sql
-from pseudopeople_spark.operators.sqltext import double, ident, string_array
+from pseudopeople_spark import datasets as D
+from pseudopeople_spark.crn import (
+    fold_salt64,
+    hash_u01_salted_py,
+    hash_u01_salted_sql,
+    hash_u01_sql,
+    salted_u01_sql,
+    u01_sql,
+)
+from pseudopeople_spark.operators.sqltext import double, ident, string, string_array
 
 U01Sql = Callable[[str, int, str], str]
 
@@ -517,3 +525,243 @@ def use_fake_name(
     u01=hash_u01_sql,
 ) -> DataFrame:
     return _apply(df, column, use_fake_name_sql(column, key_col, fake_names, p, seed, u01_sql(u01)))
+
+
+# --- token noise: phonetic, OCR and QWERTY typos -------------------------
+
+# share of typos that keep the original character after the typo
+# (reference make_typos, noise_functions.py:740-755)
+TYPO_INCLUDE_ORIGINAL = 0.1
+
+
+def token_salt(seed: int, kind: str, column: str) -> int:
+    """The folded salt of ``kind``'s per-token draws on ``column``."""
+    return fold_salt64(seed, f"{kind}_token_{column}")
+
+
+def token_draw_py(seed: int, kind: str, column: str):
+    """The per-token draws of :func:`token_noise_sql` as a Python
+    ``draw`` hook of the kernels (``kernels._corrupt_tokens_one`` takes
+    ``draw(row_key, i, L, which)``, ``kernels._typo_one_impl``
+    ``draw(row_key, i, which)``; ``row_key`` is the ``__crn64`` key)."""
+    salt = token_salt(seed, kind, column)
+    if kind == D.MAKE_TYPOS:
+        return lambda row_key, i, which: hash_u01_salted_py(salt, row_key, i, which)
+    return lambda row_key, i, L, which: hash_u01_salted_py(salt, row_key, i, 2 * L + which)
+
+
+def _sql_list(values) -> str:
+    return ", ".join(string(v) for v in values)
+
+
+# separators of the rule maps' text form (no rule token or variant
+# contains them; checked when a map is written)
+_PAIR_SEP, _KEY_SEP, _VARIANT_SEP = "\x01", "\x02", "\x03"
+
+
+def _str_map(pairs: "Mapping[str, str]") -> str:
+    """A STRING -> STRING map literal as ONE ``str_to_map`` over one
+    string literal (folded to a constant). The ``map(k1, v1, ...)``
+    form is one expression node per key and value, all walked again by
+    the optimizer for every query over the noised frame."""
+    if any(sep in f"{k}{v}" for sep in (_PAIR_SEP, _KEY_SEP) for k, v in pairs.items()):
+        raise ValueError("a rule contains a map separator")
+    text = _PAIR_SEP.join(f"{k}{_KEY_SEP}{v}" for k, v in sorted(pairs.items()))
+    return f"str_to_map({string(text)}, {string(_PAIR_SEP)}, {string(_KEY_SEP)})"
+
+
+def _below(key: str, salt: str, threshold: str, *parts: str) -> str:
+    """``hash_u01_salted_sql(key, salt, *parts) < p`` as the integer
+    compare ``pmod(xxhash64(...), 2^40) < p * 2^40`` (``threshold``,
+    a DOUBLE, see :func:`_threshold`). The two are the same test: the
+    draw is the 40-bit integer scaled by a power of two, which is exact
+    in a double both ways. The integer form is fewer expression nodes,
+    and every node of the token plan is walked again by each planning
+    pass of every query over the noised frame."""
+    return f"pmod(xxhash64({', '.join((salt, key, *parts))}), {2**40}L) < {threshold}"
+
+
+def _threshold(p: float) -> str:
+    return double(min(float(p), 1.0) * 2**40)
+
+
+def _token_scan_sql(s, stage, selected, rules, threshold, key, salt, done_sql) -> str:
+    """One phonetic or OCR pass over the string ``s`` as an
+    ``aggregate`` over its positions with a ``(pos, out)`` accumulator,
+    the twin of ``kernels._corrupt_tokens_one``. ``s``, ``selected``
+    (the cell's mask), ``threshold`` (the token probability, see
+    :func:`_threshold`) and ``salt`` are SQL; ``done_sql(out)``
+    continues with the pass's output.
+
+    At each position not yet consumed the tokens starting there are
+    tried longest first, each length L with its own draw
+    ``xxhash64(salt, key, pos, 2 * L)``; the first that fires is
+    replaced by the variant picked with draw ``2 * L + 1`` and consumes
+    L characters, and when none fires the character is copied.
+    Membership is one ``IN`` list (an ``InSet`` after optimization)
+    behind the first-character reject set, and the variant map is read
+    only when a draw fires. Unselected cells iterate over no position
+    and start from ``s`` itself."""
+    acc, i, a, m, b, v, r, n, done = (
+        f"__tok{stage}_{x}" for x in ("acc", "i", "a", "m", "b", "v", "r", "n", "done")
+    )
+    k = ident(key)
+    if any(_VARIANT_SEP in x for vs in rules.values() for x in vs):
+        raise ValueError("a rule variant contains a map separator")
+    max_len = max(len(t) for t in rules)
+    first_chars = _sql_list(sorted({t[0] for t in rules}))
+    ch = f"substr({s}, {i} + 1, 1)"
+    # lengths from the longest that fits down to 1; the first whose
+    # token is a rule and whose draw fires is the match (0: none)
+    match_len = (
+        f"CASE WHEN {ch} IN ({first_chars}) THEN aggregate(sequence(least({max_len}, length({s}) - {i}), 1, -1), 0, "
+        f"({r}, {n}) -> CASE WHEN {r} = 0 AND substr({s}, {i} + 1, {n}) IN ({_sql_list(sorted(rules))}) "
+        f"AND {_below(k, salt, threshold, f'CAST({i} AS BIGINT)', f'CAST(2 * {n} AS BIGINT)')} THEN {n} ELSE {r} END) "
+        f"ELSE 0 END"
+    )
+    variants = _str_map({t: _VARIANT_SEP.join(vs) for t, vs in rules.items()})
+    u_pick = hash_u01_salted_sql(k, salt, f"CAST({i} AS BIGINT)", f"CAST(2 * {m} + 1 AS BIGINT)")
+    replace = (
+        f"aggregate(array(split(element_at({variants}, substr({s}, {i} + 1, {m})), {string(_VARIANT_SEP)}, -1)), "
+        f"{a}, ({b}, {v}) -> named_struct('pos', {i} + {m}, "
+        f"'out', concat({b}.out, element_at({v}, CAST(floor({u_pick} * size({v})) AS INT) + 1))))"
+    )
+    advance = f"named_struct('pos', {i} + 1, 'out', concat({a}.out, {ch}))"
+    # a one-element aggregate binds the matched length once
+    step = f"aggregate(array({match_len}), {acc}, ({a}, {m}) -> CASE WHEN {m} = 0 THEN {advance} ELSE {replace} END)"
+    positions = f"CASE WHEN {selected} AND {s} != '' THEN sequence(0, length({s}) - 1) ELSE array() END"
+    init = f"named_struct('pos', 0, 'out', CASE WHEN {selected} THEN '' ELSE {s} END)"
+    return (
+        f"aggregate({positions}, {init}, ({acc}, {i}) -> CASE WHEN {i} < {acc}.pos THEN {acc} ELSE {step} END, "
+        f"{done} -> {done_sql(f'{done}.out')})"
+    )
+
+
+def _typo_sql(s, stage, selected, qwerty, threshold, key, salt) -> str:
+    """The QWERTY typo pass over ``s`` (SQL, as are ``selected``,
+    ``threshold`` and ``salt``, see :func:`_token_scan_sql`), one
+    ``transform`` over its characters, the twin of
+    ``kernels._typo_one_impl``: a character whose lower case has
+    neighbors is replaced w.p. the token probability (draw 0) by a
+    neighbor (draw 1), upper-cased when the character was, and w.p.
+    ``TYPO_INCLUDE_ORIGINAL`` (draw 2) the original follows the typo."""
+    i = f"__tok{stage}_i"
+    k = ident(key)
+    pos = f"CAST({i} AS BIGINT)"
+    ch = f"substr({s}, {i} + 1, 1)"
+    low = f"lower({ch})"
+    nbrs = f"element_at({_str_map(qwerty)}, {low})"
+    typo = f"substr({nbrs}, CAST(floor({hash_u01_salted_sql(k, salt, pos, '1L')} * length({nbrs})) AS INT) + 1, 1)"
+    cased = f"CASE WHEN {ch} != {low} THEN upper({typo}) ELSE {typo} END"
+    keep = f"CASE WHEN {_below(k, salt, _threshold(TYPO_INCLUDE_ORIGINAL), pos, '2L')} THEN {ch} ELSE '' END"
+    body = (
+        f"CASE WHEN {low} IN ({_sql_list(sorted(qwerty))}) AND {_below(k, salt, threshold, pos, '0L')} "
+        f"THEN concat({cased}, {keep}) ELSE {ch} END"
+    )
+    return (
+        f"CASE WHEN {selected} AND {s} != '' "
+        f"THEN array_join(transform(sequence(0, length({s}) - 1), {i} -> {body}), '') ELSE {s} END"
+    )
+
+
+TOKEN_NOISE_COL = "__tok_noise"
+_TOKEN_KINDS = (D.MAKE_PHONETIC_ERRORS, D.MAKE_OCR_ERRORS, D.MAKE_TYPOS)  # declaration order
+
+
+def token_noise_sql(
+    plans: "Mapping[str, Sequence[tuple[str, Mapping, float, float]]]",
+    key: str,
+    seed: int,
+    dtypes: "Mapping[str, str] | None" = None,
+) -> "tuple[str, dict[str, str]]":
+    """Phonetic, OCR and typo noise of several columns: ``plans`` maps
+    each column to ``[(kind, rules, cell_probability,
+    token_probability), ...]``, and ``key`` is a BIGINT record key.
+    Returns ``(packed, unpack)``: ``packed`` is the SQL of an
+    ``ARRAY<STRING>`` column :data:`TOKEN_NOISE_COL` holding every
+    column's noised value, NULL on rows where no cell is selected, and
+    ``unpack[column]`` reads a column's STRING value back from it.
+
+    Each (column, kind) selects cells by its own JVM mask, ``hash_u01(
+    key, seed, f"{kind}_{column}") < cell_probability`` over the
+    eligibility of the value before token noise (non-null, non-empty).
+    The outer CASE (generated code; it admits ~14 % of census rows at
+    the default rates) hands the selected rows to ONE
+    ``transform`` over the columns' values, whose body runs the kinds in
+    declaration order on the cells selected for them, with each
+    column's salts and probabilities picked from literal arrays by the
+    element's index. Each pass reads the previous one's output as a
+    finishing lambda's variable, so the text grows linearly in the
+    passes, and the rule tables appear once however many columns are
+    noised: every expression node here is walked again by each planning
+    pass of every later query over the noised frame (a census checksum
+    planned ~0.3 s slower per query with the passes written out per
+    column and per token length).
+
+    ``kernels`` is the Python twin: with the draws of
+    :func:`token_draw_py` it gives the same string for every cell."""
+    dtypes = dtypes or {}
+    rules: "dict[str, Mapping]" = {}
+    for plan in plans.values():
+        for kind, table, _, _ in plan:
+            if rules.setdefault(kind, table) != table:
+                raise ValueError(f"{kind}: every column must use the same rule table")
+    kinds = [kind for kind in _TOKEN_KINDS if kind in rules]
+    if D.MAKE_TYPOS in kinds[:-1]:
+        raise ValueError("make_typos must be the last token noise kind")
+    k = ident(key)
+    columns = list(plans)
+    values = [as_string(c, dtypes.get(c)) for c in columns]
+    s, j = "__tok_s", "__tok_j"
+
+    def param(per_column: "list[str]") -> str:
+        return f"element_at(array({', '.join(per_column)}), {j} + 1)"
+
+    gates = [f"({ident(c)} IS NOT NULL AND {v} != '')" for c, v in zip(columns, values)]
+    fired: "list[list[str]]" = [[] for _ in columns]
+    stage_params = []
+    for kind in kinds:
+        mask_salts, mask_thresholds, salts, thresholds = [], [], [], []
+        for n, column in enumerate(columns):
+            p, tp = next(((p, tp) for kd, _, p, tp in plans[column] if kd == kind), (0.0, 0.0))
+            salt = f"{fold_salt64(seed, f'{kind}_{column}')}L"
+            mask_salts.append(salt)
+            mask_thresholds.append(_threshold(p))
+            salts.append(f"{token_salt(seed, kind, column)}L")
+            thresholds.append(_threshold(tp))
+            if p > 0:
+                fired[n].append(_below(k, salt, _threshold(p)))
+        selected = _below(k, param(mask_salts), param(mask_thresholds))
+        stage_params.append((kind, selected, param(thresholds), param(salts)))
+    gate = " OR ".join(f"({g} AND ({' OR '.join(f)}))" for g, f in zip(gates, fired) if f)
+
+    def passes(stage: int, value: str) -> str:
+        if stage == len(kinds):
+            return value
+        kind, selected, threshold, salt = stage_params[stage]
+        if kind == D.MAKE_TYPOS:
+            return _typo_sql(value, stage, selected, rules[kind], threshold, key, salt)
+        return _token_scan_sql(
+            value, stage, selected, rules[kind], threshold, key, salt, lambda out: passes(stage + 1, out)
+        )
+
+    body = f"CASE WHEN {s} IS NOT NULL AND {s} != '' THEN {passes(0, s)} ELSE {s} END"
+    packed = f"CASE WHEN {gate or 'false'} THEN transform(array({', '.join(values)}), ({s}, {j}) -> {body}) END"
+    t = ident(TOKEN_NOISE_COL)
+    unpack = {c: f"coalesce(element_at({t}, {n + 1}), {v})" for n, (c, v) in enumerate(zip(columns, values))}
+    return packed, unpack
+
+
+def token_noise(
+    df: DataFrame,
+    plans: "Mapping[str, Sequence[tuple[str, Mapping, float, float]]]",
+    key_col: str,
+    seed: int = 0,
+) -> DataFrame:
+    """:func:`token_noise_sql` applied: one projection adds the packed
+    column, one more unpacks it into the noised columns and drops it.
+    ``key_col`` must be a BIGINT key (``noise_dataset`` passes
+    ``__crn64``)."""
+    packed, unpack = token_noise_sql(plans, key_col, seed, dict(df.dtypes))
+    df = df.withColumn(TOKEN_NOISE_COL, F.expr(packed))
+    return df.withColumns({column: F.expr(sql) for column, sql in unpack.items()}).drop(TOKEN_NOISE_COL)

@@ -1,9 +1,19 @@
-"""Arrow pandas-UDF kernels for token-level corruption — the three
-noise types with no built-in Spark expression: phonetic errors, OCR
-errors, and QWERTY typos (reference ``_corrupt_tokens``,
+"""Python token-corruption kernels — the three noise types with no
+single built-in Spark expression: phonetic errors, OCR errors and
+QWERTY typos (reference ``_corrupt_tokens``,
 ``src/pseudopeople/noise_functions.py:788-929``, ``make_typos``
 :675-758; semantics spec'd by its exhaustive token-pathway tests,
 ``tests/unit/test_column_noise.py:45-168`` — SURVEY.md §5.3).
+
+The noise plan does not call these: ``column_noise.token_noise_sql``
+runs the same scans as masked higher-order functions in the JVM. This
+module is their Python twin, for two readers:
+
+  * the tests (``tests/test_kernels.py``) check the JVM builder against
+    these scalars cell for cell, with the builder's xxhash64 draws
+    passed as ``draw=`` (``column_noise.token_draw_py``);
+  * the frozen oracle queries (``__spark_entry__.noise_*_bounded``) run
+    the pandas UDFs below with portable draws that DuckDB replays.
 
 Semantics implemented (the reference's contract, re-derived):
   * the string is scanned left-to-right; at each position the LONGEST
@@ -20,9 +30,9 @@ Semantics implemented (the reference's contract, re-derived):
     typos additionally KEEP the original character and insert the typo
     after it; case is preserved.
 
-Determinism: every draw is ``splitmix64(row_key, position, salt)`` —
-a stateless vectorized hash of the stable record key, never partition
-state, so output is invariant to partitioning/executor count.
+Determinism: without ``draw=`` every draw is ``splitmix64(row_key,
+position, salt)`` — a stateless hash of the stable record key, never
+partition state, so output is invariant to partitioning/executor count.
 
 The UDFs take (key:int64, mask:bool, value:string): pass-through rows
 short-circuit, so Python-side work is O(selected cells) = O(p · rows),
@@ -31,14 +41,12 @@ and each Arrow batch stays columnar end-to-end.
 
 from __future__ import annotations
 
-from typing import Callable, Mapping, Sequence
+from typing import Mapping, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from pseudopeople_spark.crn import key64, splitmix64_u01
 
 # --- pure-python splitmix64 scalar path -----------------------------------
 # The per-(row, position) draws inside the scan loops were numpy-SCALAR
@@ -210,159 +218,6 @@ def make_typos_udf(
         return out
 
     return typos
-
-
-def make_combined_token_noise_udf(specs: "list[tuple[str, Mapping, float, int]]"):
-    """ONE pandas UDF applying several token-noise kinds in sequence —
-    (kind, rules, token_probability, salt) per spec, each with its own
-    CRN mask column. Collapsing phonetic→OCR→typos into a single Arrow
-    crossing cuts the Python round-trips per noised column from 3 to 1
-    (the dominant fixed cost of the noising stage)."""
-    prepared = []
-    for kind, rules, tp, salt in specs:
-        if kind == "make_typos":
-            prepared.append(("typo", {k: str(v) for k, v in rules.items()}, tp, salt, 1, None))
-        else:
-            frozen = {k: tuple(v) for k, v in rules.items()}
-            fc = frozenset(k[0] for k in frozen if k)
-            prepared.append(("tok", frozen, tp, salt, max(len(k) for k in frozen), fc))
-
-    @F.pandas_udf(T.StringType())
-    def combined(key: pd.Series, *args: pd.Series) -> pd.Series:
-        masks = args[:-1]
-        val = args[-1]
-        out = val.copy()
-        keys = key.to_numpy(dtype=np.int64).astype(np.uint64)
-        vals = out.to_numpy(dtype=object)
-        notna = val.notna().to_numpy(dtype=bool)
-        for spec, mask in zip(prepared, masks):
-            kind, rules, tp, salt, mx, fc = spec
-            sel = mask.fillna(False).to_numpy(dtype=bool) & notna
-            idx = np.nonzero(sel)[0]
-            if len(idx) == 0:
-                continue
-            if kind == "typo":
-                for j in idx:
-                    vals[j] = _typo_one_impl(str(vals[j]), int(keys[j]), rules, tp, salt)
-            else:
-                for j in idx:
-                    vals[j] = _corrupt_tokens_one(
-                        str(vals[j]), int(keys[j]), salt, rules, mx, tp, first_chars=fc
-                    )
-        return pd.Series(vals, index=val.index, dtype=object)
-
-    return combined
-
-
-def apply_token_noise_plan(
-    df,
-    column: str,
-    key_col: str,
-    plan: "list[tuple[str, Mapping, float, float]]",
-    seed: int = 0,
-    u01: Callable = None,
-):
-    """Apply [(kind, rules, cell_probability, token_probability), ...]
-    to one column through a single combined UDF call. Masks and the
-    int64 row key are computed JVM-side (CRN)."""
-    from pseudopeople_spark.crn import hash_u01
-
-    u01 = u01 or hash_u01
-    specs = []
-    mask_cols = []
-    for kind, rules, cp, tp in plan:
-        decision = f"{kind}_{column}"
-        specs.append((kind, rules, tp, _salt(seed, decision)))
-        mask_cols.append(
-            F.col(column).isNotNull()
-            & (F.col(column).cast("string") != "")
-            & (u01(F.col(key_col), seed, decision) < cp)
-        )
-    udf = make_combined_token_noise_udf(specs)
-    # key_expr, not `key64`: that name is the imported crn numpy helper.
-    # (seed, tag) folded to one int64 at plan time; the key column is
-    # hashed in its native type (see crn.fold_salt64)
-    from pseudopeople_spark.crn import fold_salt64
-
-    key_expr = F.xxhash64(F.lit(fold_salt64(seed, f"tok_{column}")).cast("bigint"), F.col(key_col))
-    return df.withColumn(column, udf(key_expr, *mask_cols, F.col(column)))
-
-
-def apply_token_noise_all_columns(
-    df,
-    column_plans: "list[tuple[str, list[tuple[str, Mapping, float, float]]]]",
-    key_col: str,
-    seed: int = 0,
-    u01: Callable = None,  # kept for signature compat; masks are in-kernel CRN
-):
-    """Apply token noise to MANY columns through ONE pandas UDF call —
-    a single Arrow crossing for the whole dataset instead of one per
-    column.
-
-    column_plans: [(column, [(kind, rules, cell_p, token_p), ...]), ...]
-
-    Arrow payload is the hot-path cost at 100 TB, so it is minimal by
-    construction: ONE int64 CRN key + the token-noised value columns in,
-    one struct of those columns out. Cell-selection masks and
-    per-column key mixing are derived INSIDE the kernel from the key
-    via vectorized splitmix64 (numpy, no per-row Python until a cell is
-    actually selected) — shipping JVM-side mask columns tripled the
-    crossing for data the kernel can recompute from 8 bytes/row. Draws
-    stay keyed by (record key, column salt): deterministic, partition-
-    invariant, same CRN contract as the JVM expressions."""
-    prepared = []  # per column: (name, [(kind_tag, rules, tp, cp, mask_salt, tok_salt, max_len)])
-    for column, plan in column_plans:
-        specs = []
-        for kind, rules, cp, tp in plan:
-            decision = f"{kind}_{column}"
-            mask_salt = _salt(seed, f"mask_{decision}")
-            tok_salt = _salt(seed, decision)
-            if kind == "make_typos":
-                specs.append(("typo", {k: str(v) for k, v in rules.items()}, tp, cp, mask_salt, tok_salt, 1, None))
-            else:
-                frozen = {k: tuple(v) for k, v in rules.items()}
-                fc = frozenset(k[0] for k in frozen if k)
-                specs.append(("tok", frozen, tp, cp, mask_salt, tok_salt, max(len(k) for k in frozen), fc))
-        prepared.append((column, specs))
-
-    schema_fields = [T.StructField(c, T.StringType()) for c, _ in column_plans]
-
-    @F.pandas_udf(T.StructType(schema_fields))
-    def noise_all(key: pd.Series, *cols: pd.Series) -> pd.DataFrame:
-        keys = key.to_numpy(dtype=np.int64).astype(np.uint64)
-        out = {}
-        for (column, specs), val in zip(prepared, cols):
-            vals = val.to_numpy(dtype=object)
-            eligible = val.notna().to_numpy(dtype=bool) & (vals != "")
-            for kind, rules, tp, cp, mask_salt, tok_salt, mx, fc in specs:
-                # vectorized CRN mask — O(rows) hashing, O(cp·rows) Python
-                sel = eligible & (splitmix64_u01([keys, np.uint64(mask_salt)]) < cp)
-                idx = np.nonzero(sel)[0]
-                if len(idx) == 0:
-                    continue
-                # per-column row key: mix the record key with the column salt
-                col_keys = key64([keys[idx], np.uint64(tok_salt)])
-                if kind == "typo":
-                    for n, j in enumerate(idx):
-                        vals[j] = _typo_one_impl(str(vals[j]), int(col_keys[n]), rules, tp, tok_salt)
-                else:
-                    for n, j in enumerate(idx):
-                        vals[j] = _corrupt_tokens_one(
-                            str(vals[j]), int(col_keys[n]), tok_salt, rules, mx, tp,
-                            first_chars=fc,
-                        )
-            out[column] = pd.Series(vals, index=val.index, dtype=object)
-        return pd.DataFrame(out)
-
-    assert prepared  # non-empty plan
-    from pseudopeople_spark.crn import fold_salt64
-
-    key_expr = F.xxhash64(F.lit(fold_salt64(seed, "tok_all")).cast("bigint"), F.col(key_col))
-    struct_col = noise_all(key_expr, *[F.col(c) for c, _ in column_plans])
-    tmp = "__tok_noise"
-    df = df.withColumn(tmp, struct_col)
-    df = df.withColumns({column: F.col(tmp)[column] for column, _ in column_plans})
-    return df.drop(tmp)
 
 
 def _typo_one_impl(

@@ -3,8 +3,9 @@
 
   * filters must reach the parquet scan (PushedFilters),
   * dimension joins must be broadcast (no shuffle of the fact side),
-  * Python must enter the plan at most once per noising stage
-    (one ArrowEvalPython node — the batched token kernel).
+  * a noise plan must not enter Python at all (no ArrowEvalPython,
+    BatchEvalPython or MapInArrow node);
+  * every generated method must fit HotSpot's JIT limit.
 """
 
 from __future__ import annotations
@@ -42,7 +43,11 @@ def codegen_method_bytes(df: DataFrame) -> "list[tuple[str, int]]":
     """Largest method bytecode of every whole-stage-codegen subtree in
     ``df``'s physical plan (the final adaptive plan once ``df`` has
     run), as ``(subtree, bytes)`` pairs, largest first. ``subtree``
-    names the stage's operators top-down.
+    names the stage's operators top-down. A projection that runs
+    outside whole-stage codegen (one holding a higher-order function,
+    such as the token noise) is listed too, as ``Project (unsafe
+    projection)``: its rows go through a generated ``UnsafeProjection``
+    whose methods face the same limit.
 
     HotSpot never JIT-compiles a method over 8,000 bytes
     (``-XX:+DontCompileHugeMethods``, the default), so a stage whose
@@ -53,20 +58,70 @@ def codegen_method_bytes(df: DataFrame) -> "list[tuple[str, int]]":
     jvm = df._sc._jvm
     compile_ = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compile
     out = []
-    pending = [df._jdf.queryExecution().executedPlan()]
+    pending = [(df._jdf.queryExecution().executedPlan(), False)]
     while pending:
-        node = pending.pop()
+        node, in_stage = pending.pop()
         kind = node.getClass().getSimpleName()
         if kind == "AdaptiveSparkPlanExec":
-            pending.append(node.executedPlan())
+            pending.append((node.executedPlan(), in_stage))
         elif kind.endswith("QueryStageExec"):
-            pending.append(node.plan())
+            pending.append((node.plan(), False))
         elif kind == "WholeStageCodegenExec":
             stats = compile_(node.doCodeGen()._2())._2()
             out.append((_codegen_subtree(node.child()), int(stats.maxMethodCodeSize())))
+            in_stage = True
+        elif kind == "InputAdapter":
+            in_stage = False
+        elif kind == "ProjectExec" and not in_stage:
+            stats = compile_(_unsafe_projection_code(jvm, node))._2()
+            out.append(("Project (unsafe projection)", int(stats.maxMethodCodeSize())))
         children = node.children()
-        pending.extend(children.apply(i) for i in range(children.size()))
+        pending.extend((children.apply(i), in_stage) for i in range(children.size()))
     return sorted(out, key=lambda kv: -kv[1])
+
+
+def _unsafe_projection_code(jvm, project):
+    """The source ``GenerateUnsafeProjection`` compiles for a
+    ``ProjectExec`` that runs outside whole-stage codegen, assembled as
+    Spark assembles it (subexpression elimination on, the default)."""
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    gen = getattr(getattr(codegen, "GenerateUnsafeProjection$"), "MODULE$")
+    exprs = gen.canonicalize(gen.bind(project.projectList(), project.child().output()))
+    ctx = gen.newCodeGenContext()
+    ev = gen.createCode(ctx, exprs, True)
+    body = f"""
+public java.lang.Object generate(Object[] references) {{
+  return new SpecificUnsafeProjection(references);
+}}
+
+class SpecificUnsafeProjection extends org.apache.spark.sql.catalyst.expressions.UnsafeProjection {{
+  private Object[] references;
+  {ctx.declareMutableStates()}
+
+  public SpecificUnsafeProjection(Object[] references) {{
+    this.references = references;
+    {ctx.initMutableStates()}
+  }}
+
+  public void initialize(int partitionIndex) {{
+    {ctx.initPartition()}
+  }}
+
+  public java.lang.Object apply(java.lang.Object row) {{
+    return apply((InternalRow) row);
+  }}
+
+  public UnsafeRow apply(InternalRow {ctx.INPUT_ROW()}) {{
+    {ev.code().toString()}
+    return {ev.value().toString()};
+  }}
+
+  {ctx.declareAddedFunctions()}
+}}
+"""
+    return codegen.CodeFormatter.stripOverlappingComments(
+        codegen.CodeAndComment(body, ctx.getPlaceHolderToComments())
+    )
 
 
 def _codegen_subtree(node) -> str:
@@ -84,8 +139,11 @@ def _codegen_subtree(node) -> str:
     return " -> ".join(names)
 
 
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas")
+
+
 def count_python_eval_nodes(df: DataFrame) -> int:
-    """Number of Python/Arrow evaluation operators in the physical plan
-    (each one is a full Arrow ser/de round-trip of the stream)."""
+    """Number of Python evaluation operators in the physical plan (each
+    one ships the rows it sees through a Python worker and back)."""
     plan = physical_plan(df)
-    return plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
+    return sum(plan.count(name) for name in PYTHON_NODES)

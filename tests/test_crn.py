@@ -9,7 +9,9 @@ from pyspark.sql import functions as F
 import pytest
 
 from pseudopeople_spark.crn import (
+    fold_salt64,
     hash_u01,
+    hash_u01_py,
     hash_u01_salted_sql,
     hash_u01_sql,
     portable_u01,
@@ -18,6 +20,7 @@ from pseudopeople_spark.crn import (
     salted_u01_sql,
     splitmix64_u01,
     u01_sql,
+    xxhash64_py,
 )
 
 
@@ -113,3 +116,35 @@ def test_min_bigint_salt_literal(spark):
         F.expr(hash_u01_salted_sql("id", f"CAST({-(2**63)} AS BIGINT)")).alias("b"),
     ).where("NOT (a <=> b)")
     assert got.count() == 0
+
+
+def test_fold_salt64_is_length_framed():
+    """A separator inside the seed cannot move the seed/decision
+    boundary: seed '1|a' with decision 'b' and seed '1' with decision
+    'a|b' once folded the same text."""
+    assert fold_salt64("1|a", "b") != fold_salt64("1", "a|b")
+    assert fold_salt64(1, "a") == fold_salt64("1", "a")  # the seed is folded as text
+
+
+def test_xxhash64_py_matches_spark(spark):
+    """The Python twin of Spark's xxhash64 over BIGINT arguments, on
+    the edge values and on random tuples of one to four arguments."""
+    import random
+
+    edges = [0, -1, 2**63 - 1, -(2**63), 1, 42]
+    rng = random.Random(17)
+    tuples = [(a,) for a in edges] + [(a, b) for a in edges for b in edges]
+    tuples += [tuple(rng.randrange(-(2**63), 2**63) for _ in range(rng.randint(1, 4))) for _ in range(150)]
+    exprs = [
+        "xxhash64(" + ", ".join(f"CAST({v} AS BIGINT)" if v != -(2**63) else f"{v}L" for v in t) + ")"
+        for t in tuples
+    ]
+    row = spark.range(1).selectExpr(*exprs).first()
+    assert [row[i] for i in range(len(tuples))] == [xxhash64_py(*t) for t in tuples]
+
+
+def test_hash_u01_py_matches_hash_u01(spark):
+    keys = [0, -1, 2**63 - 1, -(2**63), 12345]
+    df = spark.createDataFrame([(k,) for k in keys], "k bigint")
+    got = df.select("k", hash_u01(F.col("k"), 9, "make_typos_first_name").alias("u")).collect()
+    assert {r["k"]: r["u"] for r in got} == {k: hash_u01_py(k, 9, "make_typos_first_name") for k in keys}

@@ -1,13 +1,21 @@
 """Token-corruption kernel tests — the reference's de-facto spec is
 exhaustive legal-output enumeration (its tests/unit/test_column_noise.py:45-168);
-we assert output legality, rate, determinism, and mask short-circuit."""
+we assert output legality, rate, determinism, and mask short-circuit, and
+that the JVM token noise of the noise plan (``column_noise.token_noise``)
+equals these kernels cell for cell."""
 
-import numpy as np
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
+from pseudopeople_spark import datasets as D
+from pseudopeople_spark.crn import hash_u01_py
+from pseudopeople_spark.operators import assets
+from pseudopeople_spark.operators import column_noise as cn
 from pseudopeople_spark.operators.kernels import (
     _corrupt_tokens_one,
-    apply_token_noise_plan,
+    _typo_one_impl,
     make_corrupt_tokens_udf,
     make_typos_udf,
 )
@@ -67,18 +75,65 @@ def test_typos_udf_case_and_insert(spark):
     assert row == "WQWQWQWQWQ"
 
 
-def test_apply_token_noise_plan_determinism_across_partitions(spark):
+def test_token_noise_determinism_across_partitions(spark):
     base = spark.range(5000).select(
-        F.concat(F.lit("r"), F.col("id").cast("string")).alias("record_id"),
+        F.xxhash64(F.concat(F.lit("r"), F.col("id").cast("string"))).alias("key"),
         F.lit("Johnson").alias("name"),
     )
-    plan = [("make_typos", {"o": "ip", "n": "mh"}, 0.5, 0.5)]
-    a = apply_token_noise_plan(base.repartition(3), "name", "record_id", plan, seed=5)
-    b = apply_token_noise_plan(base.repartition(19), "name", "record_id", plan, seed=5)
-    da = {r["record_id"]: r["name"] for r in a.collect()}
-    db = {r["record_id"]: r["name"] for r in b.collect()}
-    assert da == db
-    assert any(v != "Johnson" for v in da.values())
+    plan = {"name": [(D.MAKE_TYPOS, {"o": "ip", "n": "mh"}, 0.5, 0.5)]}
+
+    def checksum(df):
+        return df.agg(F.sum(F.xxhash64("key", "name").cast("decimal(38,0)"))).first()[0]
+
+    a = cn.token_noise(base.repartition(3), plan, "key", seed=5)
+    b = cn.token_noise(base.repartition(19), plan, "key", seed=5)
+    assert checksum(a) == checksum(b)
+    assert checksum(a) != checksum(base)
+
+
+def _kernel_token_noise(value, key, plan, seed, column):
+    """The Python twin of ``column_noise.token_noise`` for one cell."""
+    if value is None or value == "":
+        return value
+    selected = [hash_u01_py(key, seed, f"{kind}_{column}") < p for kind, _, p, _ in plan]
+    for (kind, rules, _, tp), sel in zip(plan, selected):
+        if not sel:
+            continue
+        draw = cn.token_draw_py(seed, kind, column)
+        if kind == D.MAKE_TYPOS:
+            value = _typo_one_impl(value, key, rules, tp, 0, draw=draw)
+        else:
+            value = _corrupt_tokens_one(value, key, 0, rules, max(map(len, rules)), tp, draw=draw)
+    return value
+
+
+@pytest.mark.parametrize("token_probability", [1.0, 0.1, 0.0])
+def test_token_noise_matches_kernels(spark, token_probability):
+    """The JVM builder equals the Python kernels with the builder's
+    xxhash64 draws, cell for cell, over the full phonetic (297 rules),
+    OCR (39) and QWERTY (62) tables: NULL and empty values, upper and
+    lower case, strings longer than the longest token, non-ASCII and
+    separator characters; two columns, one of them without OCR noise."""
+    assert (len(assets.PHONETIC_VARIANTS), len(assets.OCR_ERRORS), len(assets.QWERTY_NEIGHBORS)) == (297, 39, 62)
+    rng = random.Random(11)
+    alphabet = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 -'.é"
+    values = [None, "", "a", "Z"] + list(assets.FIRST_NAMES[:60]) + [n.lower() for n in assets.LAST_NAMES[:60]]
+    values += [n.upper() for n in assets.LAST_NAMES[60:90]] + [" ".join(assets.STREET_NAMES[:6]).lower()]
+    values += ["".join(rng.choice(alphabet) for _ in range(rng.randint(1, 40))) for _ in range(250)]
+    rows = [(rng.randrange(-(2**63), 2**63), v, w) for v, w in zip(values, reversed(values))]
+    df = spark.createDataFrame(rows, "key bigint, a string, b string")
+    phon = (D.MAKE_PHONETIC_ERRORS, assets.PHONETIC_VARIANTS, 0.6, token_probability)
+    ocr = (D.MAKE_OCR_ERRORS, assets.OCR_ERRORS, 0.6, token_probability)
+    typo = (D.MAKE_TYPOS, assets.QWERTY_NEIGHBORS, 0.6, token_probability)
+    plans = {"a": [phon, ocr, typo], "b": [phon, typo]}
+    got = {r["key"]: r for r in cn.token_noise(df, plans, "key", seed=3).collect()}
+    changed = 0
+    for key, a, b in rows:
+        row = got[key]
+        assert row["a"] == _kernel_token_noise(a, key, plans["a"], 3, "a"), (key, a)
+        assert row["b"] == _kernel_token_noise(b, key, plans["b"], 3, "b"), (key, b)
+        changed += (row["a"] != a) + (row["b"] != b)
+    assert (changed > 0) == (token_probability > 0)
 
 
 def test_oracle_retry_instance_executes_shorter_token_loop():

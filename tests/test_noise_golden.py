@@ -1,9 +1,13 @@
 """Golden noising checksums: ``noise_dataset`` output for every dataset
-spec, pinned bit for bit. The expected values were recorded from the
-Column-API plan builder before the noise plan moved to SQL text; any
-change to a draw, a literal's type or an operator's order shows up here
-as a different checksum. (It also keeps the benchmark's regenerated
-inputs identical.)
+spec, pinned bit for bit. Any change to a draw, a literal's type or an
+operator's order shows up here as a different checksum. (It also keeps
+the benchmark's regenerated inputs identical.)
+
+The expected values were first recorded from the Column-API plan
+builder before the noise plan moved to SQL text, and re-recorded once
+when token noise moved into the JVM: its cell masks and token draws
+moved from splitmix64 to the xxhash64 family, and ``crn.fold_salt64``
+became length-framed, which changes every operator's salts.
 
 Two configurations: the defaults (rates ~1 %, what production and the
 benchmark run) and a heavy one (every cell rate 0.25, raised row rates)
@@ -32,20 +36,20 @@ RECORDS = {
 # (dataset, seed) -> (order-independent xxhash64 sum, rows); seed 11
 # runs the default configuration, seed 12 the heavy one
 GOLDEN = {
-    ("american_community_survey", 11): ("52950544583908123237", 23),
-    ("american_community_survey", 12): ("24983896875715091050", 24),
-    ("current_population_survey", 11): ("-26323774158795606028", 12),
-    ("current_population_survey", 12): ("7505547390480816465", 7),
-    ("decennial_census", 11): ("21106927130990200489", 228),
-    ("decennial_census", 12): ("-51504301706076538343", 210),
-    ("social_security", 11): ("52659421848634223600", 237),
-    ("social_security", 12): ("-107906897400837588011", 224),
-    ("taxes_1040", 11): ("-83529111251053010914", 60),
-    ("taxes_1040", 12): ("-14247239819905307456", 57),
-    ("taxes_w2_and_1099", 11): ("5197388102420452416", 129),
-    ("taxes_w2_and_1099", 12): ("106364970013906620065", 125),
-    ("women_infants_and_children", 11): ("-30171682978165249424", 5),
-    ("women_infants_and_children", 12): ("-10680146069918540959", 4),
+    ("american_community_survey", 11): ("50177110626854918728", 22),
+    ("american_community_survey", 12): ("10848917506213794550", 26),
+    ("current_population_survey", 11): ("-8611553877634546693", 3),
+    ("current_population_survey", 12): ("-30935455390421822040", 12),
+    ("decennial_census", 11): ("54826189183872328072", 225),
+    ("decennial_census", 12): ("-34672623154352141810", 217),
+    ("social_security", 11): ("84624710092624621211", 237),
+    ("social_security", 12): ("-64152194060892780538", 227),
+    ("taxes_1040", 11): ("-84132547724524277738", 59),
+    ("taxes_1040", 12): ("53217272420282032217", 56),
+    ("taxes_w2_and_1099", 11): ("110628271004412011854", 128),
+    ("taxes_w2_and_1099", 12): ("-97497492406268749857", 121),
+    ("women_infants_and_children", 11): ("-15532674561343637866", 5),
+    ("women_infants_and_children", 12): ("2616082657240276631", 5),
 }
 
 

@@ -19,7 +19,10 @@ scalings applied), not the nominal config values:
     cell_probability x digit_probability;
   * use_nickname / copy_from_household_member: observed rate over ALL
     non-missing rows == cell_probability after the 1/proportion-eligible
-    scaling (noise_scaling.py:26-45).
+    scaling (noise_scaling.py:26-45);
+  * make_phonetic_errors / make_ocr_errors / make_typos: cell selection
+    rate == cell_probability, and the corruption rate per eligible
+    token of a selected cell == token_probability.
 """
 
 from __future__ import annotations
@@ -27,7 +30,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pseudopeople_spark import config
+from pseudopeople_spark import config, datasets as D
+from pseudopeople_spark.operators import assets
 from pseudopeople_spark.operators import column_noise as cn
 from pseudopeople_spark.operators import row_noise as rn
 from tests.fuzzy import fuzzy_assert_proportion
@@ -178,3 +182,48 @@ def test_do_not_respond_census_default_rate(base):
     ) / (2 * 7 * 95)
     out = rn.do_not_respond(df, "key", seed=21)
     fuzzy_assert_proportion("do_not_respond_census@1M", N - out.count(), N, expected)
+
+
+# (kind, rules, one eligible token that no longer rule starts with and
+# every variant of which differs from it); a cell is that token ten
+# times between spaces, and no rule token contains a space
+TOKEN_KINDS = {
+    "phonetic": (D.MAKE_PHONETIC_ERRORS, assets.PHONETIC_VARIANTS, "d"),
+    "ocr": (D.MAKE_OCR_ERRORS, assets.OCR_ERRORS, "5"),
+    "typos": (D.MAKE_TYPOS, assets.QWERTY_NEIGHBORS, "q"),
+}
+TOKENS_PER_CELL = 10
+
+
+def _token_cells(base, token, rows=None):
+    cells = base if rows is None else base.where(F.col("key") < rows)
+    return cells.select("key", F.lit(" ".join([token] * TOKENS_PER_CELL)).alias("tok"))
+
+
+def _corrupted_tokens(col, token):
+    """Corrupted tokens in a cell: each corruption writes exactly one
+    character other than the token and the space (a typo that keeps the
+    original writes the token again after its typo character)."""
+    return F.length(F.regexp_replace(col, f"[{token} ]", ""))
+
+
+@pytest.mark.parametrize("kind", sorted(TOKEN_KINDS))
+def test_token_noise_cell_selection_rate(base, kind):
+    # token_probability 1: a selected cell always changes, so the changed
+    # share is the selection share
+    name, rules, token = TOKEN_KINDS[kind]
+    cells = _token_cells(base, token)
+    out = cn.token_noise(cells, {"tok": [(name, rules, P_CELL, 1.0)]}, "key", seed=22)
+    changed = out.where(F.col("tok") != " ".join([token] * TOKENS_PER_CELL)).count()
+    fuzzy_assert_proportion(f"{name}_cells@1M", changed, N, P_CELL)
+
+
+@pytest.mark.parametrize("kind", sorted(TOKEN_KINDS))
+def test_token_noise_per_token_rate(base, kind):
+    # every cell selected; 100k cells x 10 tokens = 1M token draws
+    name, rules, token = TOKEN_KINDS[kind]
+    rows = 100_000
+    cells = _token_cells(base, token, rows)
+    out = cn.token_noise(cells, {"tok": [(name, rules, 1.0, P_TOKEN)]}, "key", seed=23)
+    corrupted = out.agg(F.sum(_corrupted_tokens(F.col("tok"), token))).first()[0]
+    fuzzy_assert_proportion(f"{name}_tokens@1M", corrupted, rows * TOKENS_PER_CELL, P_TOKEN)

@@ -1,6 +1,6 @@
-"""Plan-quality tests: predicate pushdown, broadcast joins, and the
-single-Arrow-crossing property of the noise plan. At 100 TB the plan
-shape is the correctness criterion for performance."""
+"""Plan-quality tests: predicate pushdown, broadcast joins, and a noise
+plan that never leaves the JVM. At 100 TB the plan shape is the
+correctness criterion for performance."""
 
 from pyspark.sql import functions as F
 
@@ -13,6 +13,7 @@ from pseudopeople_spark.plans.inspect import (
     physical_plan,
 )
 from pseudopeople_spark.sources.reader import load_standard_dataset
+from tests.test_noise_golden import RECORDS
 
 SF = "/root/testdata/sf0.001"
 
@@ -42,12 +43,17 @@ def test_dimension_joins_are_broadcast(spark):
 
 
 def test_noise_plan_single_arrow_crossing(spark):
-    """All token-noise columns (census has 5) must funnel through ONE
-    ArrowEvalPython node — the batched kernel — not one per column."""
+    """No noise plan crosses into Python: token noise runs as JVM
+    expressions (``column_noise.token_noise``), so no dataset's plan has
+    an ArrowEvalPython, BatchEvalPython or MapInArrow node (census once
+    had one ArrowEvalPython for its 5 token columns)."""
     pop = synth.simulants(spark, 100, seed=1)
-    census = synth.census_records(pop, 2020)
-    noised = noise.noise_dataset(census, D.DECENNIAL_CENSUS, config.get_config(), seed=2)
-    assert count_python_eval_nodes(noised) == 1
+    cfg = config.get_config()
+    found = {
+        dataset: count_python_eval_nodes(noise.noise_dataset(records(pop), spec, cfg, seed=2))
+        for dataset, (spec, records) in RECORDS.items()
+    }
+    assert found == dict.fromkeys(RECORDS, 0)
 
 
 # HotSpot never JIT-compiles a method of more bytecode than this
