@@ -12,8 +12,8 @@ histogram, match rate) are not written to the manifests yet.
 
 Stage shuffle budget (the thing that matters at 10^12 docs):
   1 shuffle for pair dedup (hash on pair key),
-  2 hash joins to attach fields (on record_id) above the fused-lookup
-  limit, none below it,
+  2 hash joins to attach fields (on record_id) above
+  scoring.LOOKUP_MAX_ROWS records, none below it,
   O(log n) small shuffles for connected components on the (tiny)
   match-edge set — none at all while it fits the local-finish cap:
   clustering + refinement then run on the driver from ONE size-gated
@@ -51,13 +51,6 @@ class ResolveConfig:
     snb_window: int = 3
     use_sorted_neighborhood: bool = True
     use_minhash: bool = True
-    # records tables up to this size score via the fused lookup
-    # mapInArrow path (scoring.score_pairs_fused: scratch-parquet
-    # lookup read once per python worker) — no attach joins, a 16-byte
-    # id pair on the wire instead of the ~250-byte wide row. Larger
-    # tables (the 10^12-document regime) use the co-partitioned join +
-    # score_pairs_arrow path, which never replicates records.
-    broadcast_score_limit: int = 5_000_000
     # split clusters whose transitive closure violates the
     # dataset-period uniqueness invariant (linkage.refine): the FP mass
     # at scale is same-household twins merged through a low-evidence
@@ -194,7 +187,7 @@ def normalize_records(
     # a GRAPH (JUDITH <-> JUDY are each other's nicknames; LISA is in
     # both the ALICE and ELIZABETH families), so records keep the raw
     # cleaned name and the SCORER applies nickname-family equivalence
-    # (scoring._nickname_families + similarity.make_first_name_sim_udf).
+    # (scoring._nickname_families + similarity.make_pair_sim).
     first = F.when(F.col("__first_raw").rlike("[0-9]"), None).otherwise(  # OCR/typo garbage
         _strip_fakes(F.col("__first_raw"), FAKE_FIRST_NAMES)
     )
@@ -226,7 +219,7 @@ def _assign_int_ids(records: DataFrame, id_col: str = "record_id", max_tries: in
     rid = xxhash64(record_id, salt), verified count == countDistinct;
     ``base_rid`` hashes the id with a ``_dup`` suffix stripped (the key
     the same-dataset guardian-twin exemption matches on,
-    scoring.tiered_match) and is verified 1:1 against the stripped
+    scoring.cascade_match_mask) and is verified 1:1 against the stripped
     string key in the SAME aggregate, so a base_rid collision can never
     silently exempt an unrelated same-dataset pair. On any collision
     the salt is bumped and the whole check re-runs (expected retries ~0
@@ -378,62 +371,29 @@ def resolve(
     cand = _timed("pairs", _pairs)
 
     def _scored() -> DataFrame:
-        import os
-
         # state is normalized into records for blocking but no sim spec
         # and no tier of the match cascade reads it — attaching it here
-        # would cost a lookup + 2 emitted string columns per pair
+        # would cost a lookup per side per pair
         attach = [c for c in CANONICAL_FIELDS if c != "state"] + ["base_rid"]
-        # tiered_match reads only these attach VALUES (the rest matter
-        # only through their sims): ssn consensus + first_missing +
-        # byear evidence + the same-dataset-period veto + the dup-twin
-        # exemption. Everything else is dead Python->JVM bytes.
-        emit = ["dataset", "period", "first_name", "byear", "ssn_digits", "base_rid"]
-        if (
-            n_records <= cfg.broadcast_score_limit
-            and os.environ.get("PP_SCORING_IMPL", "arrow") == "arrow"
-        ):
-            if os.environ.get("PP_SCORING_DECIDE", "1") != "0":
-                # decide worker-side and emit only the matched rows in
-                # the slim checkpoint projection: the Python->JVM Arrow
-                # stream shrinks from pairs-sized (~200 B/pair) to
-                # records-sized, and no JVM cascade scan of the full
-                # pair set remains (scoring.cascade_match_mask)
-                return scoring.score_pairs_fused(
-                    spark, cand, records, attach, emit_attach=emit,
-                    decide={
-                        "threshold": cfg.threshold,
-                        "same_dataset_distinct": cfg.unique_within_dataset,
-                    },
-                    n_records=n_records,
-                )
-            out = scoring.score_pairs_fused(
-                spark, cand, records, attach, emit_attach=emit, n_records=n_records
-            )
-        else:
-            out = scoring.score_pairs(scoring.attach_pair_fields(cand, records, attach))
-        # Fuse the match decision into the same pass: is_match is pure
-        # JVM over the sims just computed, so deciding HERE means no
-        # downstream consumer ever re-runs the cascade over the full
-        # pair set — match_edges sees the column and only filters.
-        out = scoring.tiered_match(out, cfg.threshold, same_dataset_distinct=cfg.unique_within_dataset)
-        # Checkpoint only what downstream READS: the matched rows (plus
-        # score + the ssn-consensus inputs). Nothing downstream ever
-        # looks at a non-match row — match_edges filters on is_match
-        # immediately — so materializing all 42M scored rows into the
-        # block manager (~3 GB of storage at 300k simulants) bought
-        # nothing and its GC pressure was measured to DOUBLE the
-        # scoring stage's wall at local[8] (252s -> 710s at 24g heap):
-        # cached blocks + 8 task threads' allocation rate put the old
-        # collector into thrash. The match filter cuts the persisted
-        # set ~70x (matches ~ records, not pairs), which is also the
-        # only 100 TB-viable shape. The full scored frame stays
-        # available lazily (out['scored'] recomputes on use).
-        keep = ["id_l", "id_r", "score", "is_match", "l_ssn_digits", "r_ssn_digits"]
-        return out.select(*keep).where(F.col("is_match"))
+        # One mapInArrow pass scores AND decides in the worker; the stage
+        # checkpoints only what downstream reads: the matched rows (plus
+        # score + the ssn-consensus inputs). Materializing all 42M scored
+        # rows at 300k simulants (~3 GB in the block manager) was
+        # measured to DOUBLE the scoring stage's wall at local[8]
+        # (252s -> 710s at 24g heap) through GC thrash; matches ~
+        # records, not pairs. The field source (closure IPC, scratch
+        # parquet, or the co-partitioned join) follows n_records.
+        return scoring.score_pairs_fused(
+            spark, cand, records, attach,
+            decide={
+                "threshold": cfg.threshold,
+                "same_dataset_distinct": cfg.unique_within_dataset,
+            },
+            n_records=n_records,
+        )
 
     scored = _timed("scoring", _scored)
-    edges = scoring.match_edges(scored, cfg.threshold, same_dataset_distinct=cfg.unique_within_dataset)
+    edges = scoring.match_edges(scored)
 
     def _local_edges():
         """The pruned match edges as a pandas (id_l, id_r, score)

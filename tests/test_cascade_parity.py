@@ -1,33 +1,39 @@
 """Worker-side cascade (scoring.cascade_match_mask) must decide exactly
-like the JVM Column cascade (scoring.tiered_match over _tier_columns).
+like the JVM Column cascade (tests/cascade_reference.py: tiered_match
+over _tier_columns).
 
-The decide-mode fused scorer emits only matched rows, so a divergence
-here silently changes the edge set. Parity is checked two ways:
+The scorer emits only matched rows, so a divergence here silently
+changes the edge set. Parity is checked on an adversarial randomized
+grid (seeded): records drawn from value pools dense in the cascade's
+boundary cases — nulls, empty strings, 1/2/5-digit-apart SSNs, 7-digit
+truncations, swapped dobs, insane byears, same dataset-period slots,
+dup twins — paired ~quadratically. The reference side computes the
+sims once in-process (scoring._make_sim_engine, the worker's own
+engine) and runs the JVM cascade over them; the decide side runs
+score_pairs_fused through both field sources, the per-worker lookup
+and attach_pair_fields' join. Both sides see the SAME sims, so any
+mismatch is the cascade translation itself, not float drift.
 
-  1. an adversarial randomized grid (seeded): records drawn from value
-     pools dense in the cascade's boundary cases — nulls, empty strings,
-     1/2/5-digit-apart SSNs, 7-digit truncations, swapped dobs, insane
-     byears, same dataset-period slots, dup twins — paired ~quadratically,
-     then JVM cascade vs decide-mode fused output compared as sets;
-  2. the same comparison over a real noised 1.5k-simulant resolve input
-     (tests/test_e2e.py's generator), via the pipeline's own attach set.
-
-Both use the SAME sims (fused scorer) on both sides, so any mismatch is
-the cascade translation itself, not float drift in the sims.
+test_resolve_join_and_lookup_same_edges then runs resolve() end to end
+through each field source on a real noised census + W-2 input.
 """
 
 from __future__ import annotations
 
-import os
 import random
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from pseudopeople_spark.linkage import scoring
 from pseudopeople_spark.linkage.pipeline import CANONICAL_FIELDS
+from tests.cascade_reference import tiered_match
 
 ATTACH = [c for c in CANONICAL_FIELDS if c != "state"] + ["base_rid"]
+# _pool_records' column order after record_id
+_REC_FIELDS = ["dataset", "period", "first_name", "middle", "last_name", "dob", "byear",
+               "ssn_digits", "zipcode", "city", "sex", "base_rid"]
 
 
 def _pool_records(n=400, seed=7):
@@ -98,29 +104,51 @@ def grid(spark):
     return recs, pairs
 
 
+@pytest.fixture(scope="module")
+def reference_scored(spark):
+    """The grid pairs with both records' fields and the engine's sims +
+    score, computed once in-process, as a frame for the JVM cascade."""
+    recs, pairs = _pool_records(), _pairs(400)
+    col = {}
+    for j, f in enumerate(_REC_FIELDS, start=1):
+        typ = pa.int64() if f == "base_rid" else pa.string()
+        col[f"l_{f}"] = pa.array([recs[a][j] for a, _ in pairs], typ)
+        col[f"r_{f}"] = pa.array([recs[b][j] for _, b in pairs], typ)
+    specs = [(s.name, s.kind, s.weight) for s in scoring.DEFAULT_FIELDS]
+    arrays, names = scoring._make_sim_engine(scoring._nickname_families(), specs)(col, len(pairs))
+    types = {"l_base_rid": "long", "r_base_rid": "long", **{n: "double" for n in names}}
+    ddl = ", ".join(f"{n} {types.get(n, 'string')}" for n in list(col) + names)
+    cols = [a.to_pylist() for a in list(col.values()) + arrays]
+    return spark.createDataFrame(
+        [(a, b, *row) for (a, b), row in zip(pairs, zip(*cols))], "id_l long, id_r long, " + ddl
+    )
+
+
 @pytest.mark.parametrize("same_ds", [False, True])
-def test_cascade_parity_on_adversarial_grid(spark, grid, same_ds):
+def test_cascade_parity_on_adversarial_grid(spark, grid, reference_scored, same_ds, monkeypatch):
     recs, pairs = grid
-    decide = {"threshold": 0.92, "same_dataset_distinct": same_ds}
-    got = _match_set(
-        scoring.score_pairs_fused(spark, pairs, recs, ATTACH, decide=decide)
-    )
-    ref_scored = scoring.score_pairs_fused(
-        spark, pairs, recs, ATTACH,
-        emit_attach=["dataset", "period", "first_name", "byear", "ssn_digits", "base_rid"],
-    )
     ref = _match_set(
-        scoring.tiered_match(ref_scored, 0.92, same_dataset_distinct=same_ds)
+        tiered_match(reference_scored, 0.92, same_dataset_distinct=same_ds)
         .where(F.col("is_match"))
-        .select("id_l", "id_r", "score", "is_match", "l_ssn_digits", "r_ssn_digits")
+        .select(*scoring.DECIDED_COLUMNS)
     )
-    assert got == ref
+    decide = {"threshold": 0.92, "same_dataset_distinct": same_ds}
+
+    def decided():
+        return _match_set(
+            scoring.score_pairs_fused(spark, pairs, recs, ATTACH, decide=decide, n_records=400)
+        )
+
+    assert ref and decided() == ref  # per-worker lookup
+    monkeypatch.setattr(scoring, "LOOKUP_MAX_ROWS", 0)
+    assert decided() == ref  # attach_pair_fields' join
 
 
-def test_resolve_decide_toggle_same_edges(spark):
-    """resolve() with PP_SCORING_DECIDE on vs off -> identical match
-    edge set on a real noised multi-dataset input (the e2e recipe at
-    reduced scale)."""
+def test_resolve_join_and_lookup_same_edges(spark, monkeypatch):
+    """resolve() through the co-partitioned join (records over
+    scoring.LOOKUP_MAX_ROWS, here 0) and through the per-worker lookup
+    -> identical edges and assignments on a real noised multi-dataset
+    input (the e2e recipe at reduced scale)."""
     from pseudopeople_spark import config, datasets as D, noise, synth
     from pseudopeople_spark.linkage.pipeline import ResolveConfig, normalize_records, resolve
 
@@ -142,13 +170,13 @@ def test_resolve_decide_toggle_same_edges(spark):
 
     def run():
         out = resolve(spark, records, ResolveConfig())
-        return {(r["id_l"], r["id_r"], round(r["score"], 12)) for r in out["edges"].collect()}
+        edges = {(r["id_l"], r["id_r"], round(r["score"], 12)) for r in out["edges"].collect()}
+        asg = {(r["record_id"], r["cluster_id"]) for r in out["assignments"].collect()}
+        return edges, asg, "scoring.lookup_ipc" in out["stage_seconds"]
 
-    os.environ["PP_SCORING_DECIDE"] = "1"
-    try:
-        on = run()
-        os.environ["PP_SCORING_DECIDE"] = "0"
-        off = run()
-    finally:
-        os.environ.pop("PP_SCORING_DECIDE", None)
-    assert on and on == off
+    lookup_edges, lookup_asg, lookup_used = run()
+    monkeypatch.setattr(scoring, "LOOKUP_MAX_ROWS", 0)
+    join_edges, join_asg, join_looked_up = run()
+    assert lookup_used and not join_looked_up
+    assert lookup_edges and join_edges == lookup_edges
+    assert join_asg == lookup_asg

@@ -1,16 +1,16 @@
-"""The two score_pairs physical strategies (mapInArrow vs scalar
-pandas UDFs) must be value-identical — score_pairs_arrow is the default
-plan precisely because it is a pure physical rewrite (see
-scoring.score_pairs docstring; measured 1.5-2x on the 8.4M-pair A/B,
-tools/ab_scoring_gate.py)."""
+"""The one scorer (scoring.score_pairs_fused over make_fused_batches):
+its Arrow sims against the Python scalar kernels (which
+test_similarity pins to DuckDB), its two field sources — the per-worker
+lookup and attach_pair_fields' join — against each other, and the
+lookup's size gates."""
 
 from __future__ import annotations
 
-import math
+import pyarrow as pa
 
-import pytest
-
+from pseudopeople_spark.functions import similarity as S
 from pseudopeople_spark.linkage import scoring
+from pseudopeople_spark.plans.inspect import count_python_eval_nodes, physical_plan
 
 
 def _rows():
@@ -27,107 +27,64 @@ def _rows():
     ]
 
 
-@pytest.fixture(scope="module")
-def wide(spark):
-    cols = ["id_l", "id_r"]
-    for f in ["first_name", "last_name", "dob", "ssn_digits", "zipcode", "city", "sex", "middle"]:
-        cols += [f"l_{f}", f"r_{f}"]
-    rows = []
-    for r in _rows():
-        (il, ir, lf, rf, ll, rl, ld, rd, ls, rs, lz, rz, lc, rc, lx, rx, lm, rm) = r
-        rows.append((il, ir, lf, rf, ll, rl, ld, rd, ls, rs, lz, rz, lc, rc, lx, rx, lm, rm))
-    return spark.createDataFrame(rows, cols)
-
-
-def _collect(df):
-    out = {}
-    for row in df.collect():
-        d = row.asDict()
-        out[(d["id_l"], d["id_r"])] = {
-            k: v for k, v in d.items() if k.startswith("sim_") or k == "score"
-        }
-    return out
-
-
-def test_arrow_and_udf_scorers_identical(wide):
-    a = _collect(scoring.score_pairs_arrow(wide))
-    u = _collect(scoring.score_pairs_udf(wide))
-    assert a.keys() == u.keys()
-    for key in a:
-        for col in a[key]:
-            x, y = a[key][col], u[key][col]
-            assert (x is None) == (y is None), (key, col, x, y)
-            if x is not None:
-                assert math.isclose(x, y, rel_tol=0, abs_tol=0), (key, col, x, y)
-
-
+# the field order of _rows(): (id_l, id_r, then l/r of each field)
 _FIELDS = ["first_name", "last_name", "dob", "ssn_digits", "zipcode", "city", "sex", "middle"]
 
 
-def _records_and_pairs(spark):
-    """The _rows() pairs as an int-id records table + bare id pairs."""
-    recs = []
-    for i, r in enumerate(_rows()):
-        (il, ir, lf, rf, ll, rl, ld, rd, ls, rs, lz, rz, lc, rc, lx, rx, lm, rm) = r
-        recs.append((2 * i, lf, ll, ld, ls, lz, lc, lx, lm))
-        recs.append((2 * i + 1, rf, rl, rd, rs, rz, rc, rx, rm))
-    records = spark.createDataFrame(recs, ["record_id"] + _FIELDS)
-    pairs = spark.createDataFrame(
-        [(2 * i, 2 * i + 1) for i in range(len(_rows()))], ["id_l", "id_r"]
-    )
-    return records, pairs
+def _engine_sims():
+    """sim_<field> and score of every _rows() pair, from the worker's
+    Arrow engine run in-process."""
+    rows = _rows()
+    col = {}
+    for k, f in enumerate(_FIELDS):
+        col[f"l_{f}"] = pa.array([r[2 + 2 * k] for r in rows], pa.string())
+        col[f"r_{f}"] = pa.array([r[3 + 2 * k] for r in rows], pa.string())
+    specs = [(s.name, s.kind, s.weight) for s in scoring.DEFAULT_FIELDS]
+    arrays, names = scoring._make_sim_engine(scoring._nickname_families(), specs)(col, len(rows))
+    return {
+        (r[0], r[1]): {n: a[i].as_py() for n, a in zip(names, arrays)}
+        for i, r in enumerate(rows)
+    }
 
 
-def test_fused_broadcast_scorer_matches_join_path(spark):
-    records, pairs = _records_and_pairs(spark)
-    fused = scoring.score_pairs_fused(spark, pairs, records, _FIELDS)
-    joined = scoring.score_pairs_arrow(
-        scoring.attach_pair_fields(pairs, records, _FIELDS)
-    )
-    f = {(r["id_l"], r["id_r"]): r.asDict() for r in fused.collect()}
-    j = {(r["id_l"], r["id_r"]): r.asDict() for r in joined.collect()}
-    assert f.keys() == j.keys()
-    for key in f:
-        for col in f[key]:
-            assert f[key][col] == j[key][col] or (
-                f[key][col] is None and j[key][col] is None
-            ), (key, col, f[key][col], j[key][col])
+def _scalar_sim(name, kind, a, b, pair_sim):
+    """One field's similarity from the Python scalar kernels."""
+    if a is None or b is None:
+        return None
+    if kind == "jw":
+        a, b = a.upper(), b.upper()
+        if a == b:
+            return 1.0 if a else 0.0
+        return pair_sim(a, b) if name == "first_name" else S.jaro_winkler(a, b)
+    if kind == "exact":
+        return 1.0 if a == b else 0.0
+    if kind == "dob" and (a == b or a[:4] + a[6:8] + a[4:6] == b):
+        return 1.0
+    m = max(len(a), len(b))
+    return 1.0 - S.levenshtein(a, b) / m if m else None
 
 
-def test_ipc_lookup_call_removes_previous_scratch_dir(spark, tmp_path, monkeypatch):
-    """The single live scratch-lookup slot is cleared on BOTH lookup
-    branches: a scratch-parquet call followed by a closure-IPC call
-    leaves no scratch dir behind."""
-    monkeypatch.setenv("PP_FUSED_LOOKUP_DIR", str(tmp_path))
-    records, pairs = _records_and_pairs(spark)
-    big = scoring.score_pairs_fused(
-        spark, pairs, records, _FIELDS, n_records=scoring.SMALL_LOOKUP_MAX_ROWS + 1
-    )
-    want = sorted(big.collect())
-    assert len(list(tmp_path.iterdir())) == 1  # the parquet lookup
-    small = scoring.score_pairs_fused(spark, pairs, records, _FIELDS, n_records=len(_rows()) * 2)
-    assert list(tmp_path.iterdir()) == []
-    assert scoring._LIVE_REC_DIR is None
-    assert sorted(small.collect()) == want
+def test_arrow_sims_match_scalar_kernels():
+    """Every (pair, field) sim and every score of the Arrow engine
+    equals the scalar kernels' value exactly: the vectorized equality
+    gates, the numpy Levenshtein, the memos and the ASCII fallback
+    change no value."""
+    pair_sim = S.make_pair_sim(scoring._nickname_families())
+    got = _engine_sims()
+    for r in _rows():
+        num = den = 0.0
+        for spec in scoring.DEFAULT_FIELDS:
+            k = _FIELDS.index(spec.name)
+            want = _scalar_sim(spec.name, spec.kind, r[2 + 2 * k], r[3 + 2 * k], pair_sim)
+            assert got[(r[0], r[1])][f"sim_{spec.name}"] == want, (r[0], spec.name)
+            if want is not None:
+                num += want * spec.weight
+                den += spec.weight
+        assert got[(r[0], r[1])]["score"] == (num / den if den > 0 else 0.0), r[0]
 
 
-def test_ipc_lookup_over_byte_gate_takes_parquet_path(spark, tmp_path, monkeypatch):
-    """A records table under the row gate but over the byte gate is
-    looked up from scratch parquet, with unchanged scores."""
-    monkeypatch.setenv("PP_FUSED_LOOKUP_DIR", str(tmp_path))
-    records, pairs = _records_and_pairs(spark)
-    n = len(_rows()) * 2
-    want = sorted(scoring.score_pairs_fused(spark, pairs, records, _FIELDS, n_records=n).collect())
-    assert list(tmp_path.iterdir()) == []  # IPC path: no scratch write
-    monkeypatch.setattr(scoring, "SMALL_LOOKUP_MAX_BYTES", 1)
-    gated = scoring.score_pairs_fused(spark, pairs, records, _FIELDS, n_records=n)
-    assert len(list(tmp_path.iterdir())) == 1  # the parquet lookup
-    assert scoring._LIVE_REC_DIR is not None
-    assert sorted(gated.collect()) == want
-
-
-def test_arrow_scorer_known_values(wide):
-    a = _collect(scoring.score_pairs_arrow(wide))
+def test_arrow_scorer_known_values():
+    a = _engine_sims()
     # equal non-empty strings -> 1.0; both-empty names -> 0.0
     assert a[("a3", "b3")]["sim_first_name"] == 0.0
     assert a[("a3", "b3")]["sim_last_name"] == 1.0
@@ -141,3 +98,78 @@ def test_arrow_scorer_known_values(wide):
     # null on either side -> null sim
     assert a[("a2", "b2")]["sim_first_name"] is None
     assert a[("a6", "b6")]["sim_middle"] is None
+
+
+_ATTACH = _FIELDS + ["dataset", "period", "byear", "base_rid"]
+
+
+def _records_and_pairs(spark):
+    """The _rows() pairs as an int-id records table (left side census,
+    right side W-2, so the same-dataset veto never applies) + bare id
+    pairs."""
+    recs = []
+    for i, r in enumerate(_rows()):
+        for side, dataset in ((0, "census"), (1, "w2")):
+            rid = 2 * i + side
+            vals = [r[2 + 2 * k + side] for k in range(len(_FIELDS))]
+            dob = vals[_FIELDS.index("dob")]
+            recs.append((rid, *vals, dataset, "2020", dob[:4] if dob else None, rid))
+    records = spark.createDataFrame(
+        recs,
+        "record_id long, " + ", ".join(f"{f} string" for f in _FIELDS)
+        + ", dataset string, period string, byear string, base_rid long",
+    )
+    pairs = spark.createDataFrame(
+        [(2 * i, 2 * i + 1) for i in range(len(_rows()))], "id_l long, id_r long"
+    )
+    return records, pairs
+
+
+def test_fused_broadcast_scorer_matches_join_path(spark, monkeypatch):
+    """The per-worker lookup and attach_pair_fields' co-partitioned join
+    feed the one generator the same fields: identical decided rows, one
+    Python pass each, and a join only on the join side."""
+    records, pairs = _records_and_pairs(spark)
+    n = len(_rows()) * 2
+    looked_up = scoring.score_pairs_fused(spark, pairs, records, _ATTACH, n_records=n)
+    monkeypatch.setattr(scoring, "LOOKUP_MAX_ROWS", 0)
+    joined = scoring.score_pairs_fused(spark, pairs, records, _ATTACH, n_records=n)
+    assert "Join" not in physical_plan(looked_up)
+    assert "Join" in physical_plan(joined)
+    assert count_python_eval_nodes(looked_up) == count_python_eval_nodes(joined) == 1
+    assert looked_up.columns == joined.columns == list(scoring.DECIDED_COLUMNS)
+    want = sorted(looked_up.collect())
+    assert want and sorted(joined.collect()) == want
+
+
+def test_ipc_lookup_call_removes_previous_scratch_dir(spark, tmp_path, monkeypatch):
+    """The single live scratch-lookup slot is cleared on BOTH lookup
+    branches: a scratch-parquet call followed by a closure-IPC call
+    leaves no scratch dir behind."""
+    monkeypatch.setenv("PP_FUSED_LOOKUP_DIR", str(tmp_path))
+    records, pairs = _records_and_pairs(spark)
+    big = scoring.score_pairs_fused(
+        spark, pairs, records, _ATTACH, n_records=scoring.SMALL_LOOKUP_MAX_ROWS + 1
+    )
+    want = sorted(big.collect())
+    assert want
+    assert len(list(tmp_path.iterdir())) == 1  # the parquet lookup
+    small = scoring.score_pairs_fused(spark, pairs, records, _ATTACH, n_records=len(_rows()) * 2)
+    assert list(tmp_path.iterdir()) == []
+    assert scoring._LIVE_REC_DIR is None
+    assert sorted(small.collect()) == want
+
+
+def test_ipc_lookup_over_byte_gate_takes_parquet_path(spark, tmp_path, monkeypatch):
+    """A records table under the row gate but over the byte gate is
+    looked up from scratch parquet, with unchanged scores."""
+    monkeypatch.setenv("PP_FUSED_LOOKUP_DIR", str(tmp_path))
+    records, pairs = _records_and_pairs(spark)
+    n = len(_rows()) * 2
+    want = sorted(scoring.score_pairs_fused(spark, pairs, records, _ATTACH, n_records=n).collect())
+    assert list(tmp_path.iterdir()) == []  # IPC path: no scratch write
+    monkeypatch.setattr(scoring, "SMALL_LOOKUP_MAX_BYTES", 1)
+    gated = scoring.score_pairs_fused(spark, pairs, records, _ATTACH, n_records=n)
+    assert len(list(tmp_path.iterdir())) == 1  # the parquet lookup
+    assert scoring._LIVE_REC_DIR is not None
+    assert sorted(gated.collect()) == want

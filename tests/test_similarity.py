@@ -200,12 +200,18 @@ def test_same_dataset_veto_scoped_to_period(spark):
     """The same-dataset hard veto is scoped to the dataset-PERIOD: a
     2020-census and a 2030-census row of one entity (perfect sims) is a
     legitimate match; two rows in the SAME period stay vetoed, as do
-    rows with NULL periods (whole-dataset conservative default)."""
-    from pseudopeople_spark.linkage.scoring import tiered_match
+    rows with NULL periods (whole-dataset conservative default). Both
+    the production worker cascade and the JVM reference decide so."""
+    import numpy as np
+    import pyarrow as pa
+
+    from pseudopeople_spark.linkage.scoring import cascade_match_mask
+    from tests.cascade_reference import tiered_match
 
     base = dict(
         score=1.0, sim_first_name=1.0, sim_last_name=1.0, sim_dob=1.0,
         sim_middle=1.0, sim_sex=1.0, sim_zipcode=1.0, sim_city=1.0,
+        sim_ssn_digits=1.0,
         l_first_name="ALICE", r_first_name="ALICE",
         l_ssn_digits="123456789", r_ssn_digits="123456789",
         l_byear="1980", r_byear="1980",
@@ -216,11 +222,19 @@ def test_same_dataset_veto_scoped_to_period(spark):
         {**base, "id_l": "c", "id_r": "d", "l_period": "2020", "r_period": "2020"},
         {**base, "id_l": "e", "id_r": "f", "l_period": None, "r_period": None},
     ]
+    want = {"a": True, "c": False, "e": False}
     scored = spark.createDataFrame(rows)
     got = {r["id_l"]: r["is_match"] for r in tiered_match(scored, same_dataset_distinct=True).collect()}
     assert got["a"] is True, "cross-period same-dataset pair must not be hard-vetoed"
     assert got["c"] is False, "same-period pair stays vetoed"
     assert got["e"] is False, "null periods keep the whole-dataset veto"
+
+    sim = {k[4:]: np.array([r[k] for r in rows]) for k in base if k.startswith("sim_")}
+    aux = {k: pa.array([r[k] for r in rows], pa.string()) for k in rows[0] if k[:2] in ("l_", "r_")}
+    # distinct base_rids: no guardian-duplication twin among the rows
+    aux["l_base_rid"], aux["r_base_rid"] = pa.array([1, 3, 5]), pa.array([2, 4, 6])
+    mask = cascade_match_mask(sim, np.ones(3), aux, same_dataset_distinct=True)
+    assert dict(zip(want, mask.tolist())) == want
 
 
 def test_cross_best_equals_naive_cross_product():

@@ -180,7 +180,7 @@ def worker(cores: int, n: int, quality_cores: int = 8) -> None:
 
     # JIT/codegen warmup (off the clock): resolve() a small slice of the
     # SAME input first. The generated classes (blocking stack, window
-    # pair-gen, dedup exchange, tiered_match) depend on plan shape, not
+    # pair-gen, dedup exchange, scoring pass) depend on plan shape, not
     # data size, so the mini-run compiles what the timed run executes.
     # Measured cold-vs-warm on the 20k input: first evaluation of the
     # blocking plan costs 6-50 s (Janino compile + HotSpot tiers), the

@@ -13,8 +13,8 @@ Three modes:
                       optional cProfile dump — hypothesis testing in
                       seconds instead of Spark legs in minutes
   --leg <cores> <n>   one pinned Spark leg timing ONLY the scoring
-                      stage (fused scorer + tiered_match + the slim
-                      projection resolve() checkpoints), noop sink
+                      stage (the fused scorer, deciding in the worker,
+                      as resolve() runs it), noop sink
 
   default: orchestrate legs at 2 and 8 cores (alternating, 2 reps)
   and print per-level walls + the N->4N scoring efficiency.
@@ -98,7 +98,8 @@ def inproc(n: int, max_batches: int, profile: bool) -> None:
     specs = [(s.name, s.kind, s.weight) for s in scoring.DEFAULT_FIELDS]
     families = scoring._nickname_families()
     gen = scoring.make_fused_batches(
-        _FakeBroadcast(), "record_id", attach, specs, families, 0, 1
+        _FakeBroadcast(), "record_id", attach, specs, families, 0, 1,
+        decide={"threshold": 0.92, "same_dataset_distinct": True},
     )
     batches = pair_tbl.combine_chunks().to_batches(max_chunksize=20_000)
     if max_batches:
@@ -131,8 +132,6 @@ def inproc(n: int, max_batches: int, profile: bool) -> None:
 
 
 def leg(cores: int, n: int) -> None:
-    from pyspark.sql import functions as F
-
     from pseudopeople_spark.linkage import scoring
     from pseudopeople_spark.linkage.pipeline import CANONICAL_FIELDS, ResolveConfig
     from pseudopeople_spark.session import get_spark
@@ -156,21 +155,13 @@ def leg(cores: int, n: int) -> None:
     n_parts = max(cores, -(-n_pairs // per_part))
     pairs = pairs.repartition(n_parts, "id_l").localCheckpoint()
     attach = [c for c in CANONICAL_FIELDS if c != "state"] + ["base_rid"]
-    emit = ["dataset", "period", "first_name", "byear", "ssn_digits", "base_rid"]
     t0 = time.time()
-    keep = ["id_l", "id_r", "score", "is_match", "l_ssn_digits", "r_ssn_digits"]
-    if os.environ.get("PP_SCORING_DECIDE", "1") != "0":
-        out = scoring.score_pairs_fused(
-            spark, pairs, records, attach, emit_attach=emit,
-            decide={"threshold": cfg.threshold, "same_dataset_distinct": True},
-        )
-        t_setup = time.time() - t0
-        out.write.mode("overwrite").format("noop").save()
-    else:
-        out = scoring.score_pairs_fused(spark, pairs, records, attach, emit_attach=emit)
-        t_setup = time.time() - t0  # scratch lookup write (eager part)
-        out = scoring.tiered_match(out, cfg.threshold, same_dataset_distinct=True)
-        out.select(*keep).where(F.col("is_match")).write.mode("overwrite").format("noop").save()
+    out = scoring.score_pairs_fused(
+        spark, pairs, records, attach,
+        decide={"threshold": cfg.threshold, "same_dataset_distinct": True},
+    )
+    t_setup = time.time() - t0  # scratch lookup write (eager part)
+    out.write.mode("overwrite").format("noop").save()
     wall = round(time.time() - t0, 2)
     print(json.dumps({
         "cores": cores, "n": n, "pairs": n_pairs, "scoring_sec": wall,
