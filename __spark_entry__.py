@@ -1639,10 +1639,9 @@ def ann_ivf_topk_query(spark, sf_dir):
     deterministic hyperplanes (integer-mixed weights, identical doubles
     in both engines) -> 16 buckets; queries probe their own bucket plus
     the 4 Hamming-1 flips, so candidates shrink to ~5/16 of the corpus
-    while the oracle replays the EXACT same top-k in DuckDB. The
-    k-means-trained IVF variant (functions/ann.py) is the adaptive
-    scale path, pytest-verified for recall vs brute force and
-    partition invariance."""
+    while the oracle replays the EXACT same top-k in DuckDB. (A
+    k-means-trained IVF variant lived in functions/ann.py until commit
+    b8e0934.)"""
     # spread the per-element plane-dot expressions over the cores
     # (single-row-group scan -> 1 task otherwise; see _par)
     _t(spark, sf_dir, "embeddings").repartition(_par(spark)).createOrReplaceTempView("embeddings")

@@ -58,8 +58,8 @@ def _ingest_extract(df: DataFrame, spec: D.DatasetSpec, year: "int | None") -> D
 
     # ---- stable record id, ALWAYS namespaced by dataset: extracts of
     # different datasets share pandas index values 0..N, and un-prefixed
-    # ids collide downstream (cluster_records hashes record_id to a node
-    # id — same id across datasets would silently merge clusters)
+    # ids collide downstream (resolve() keys every record by its
+    # record_id and refuses input that repeats one)
     if "__index_level_0__" in cols:
         df = df.withColumn(
             "record_id", F.concat_ws("_", F.lit(spec.name), F.col("__index_level_0__").cast("string"))

@@ -249,8 +249,8 @@ def simhash_pairs_from_sigs_sql(d: Dialect, sigs_rel: str, max_hamming: int = 3,
     banded = " UNION ALL ".join(band_selects)
     ham = f"bit_count({d.xor('l.sig', 'r.sig')})"
     if first_band_only:
-        no_earlier = " AND ".join(
-            f"NOT (l.band_no > {k} AND {band_vals[k].replace('SIDE', 'l')} = "
+        no_earlier = "".join(
+            f" AND NOT (l.band_no > {k} AND {band_vals[k].replace('SIDE', 'l')} = "
             f"{band_vals[k].replace('SIDE', 'r')})"
             for k in range(n_bands - 1)
         )
@@ -265,7 +265,7 @@ def simhash_pairs_from_sigs_sql(d: Dialect, sigs_rel: str, max_hamming: int = 3,
             f"SELECT l.doc_id AS id_l, r.doc_id AS id_r, "
             f"CAST({ham} AS BIGINT) AS hamming "
             f"FROM banded l JOIN banded r ON l.band_no = r.band_no AND l.band_val = r.band_val "
-            f"WHERE l.doc_id < r.doc_id AND {ham} <= {max_hamming} AND {no_earlier}"
+            f"WHERE l.doc_id < r.doc_id AND {ham} <= {max_hamming}{no_earlier}"
         )
     return (
         f"WITH banded AS ({banded}) "

@@ -16,7 +16,7 @@ missed by one key (typo'd surname breaks soundex) is caught by another
      3-gram shingles — catches heavy multi-token corruption.
 
 Skew handling (north_rule "partitioning/shuffle/skew handled
-explicitly"): block-size histogram → blocks above ``max_block_size``
+explicitly"): block-size histogram → blocks above ``pairs.MAX_BLOCK_SIZE``
 are NOT exploded quadratically; they fall back to a sorted-neighborhood
 sweep *inside* the block (linear in block size), so one Zipf-head
 surname cannot produce a straggler task. All passes are pure DataFrame
@@ -32,19 +32,18 @@ from pseudopeople_spark.functions.similarity import double_metaphone_udf, ngrams
 
 BLOCK_SCHEMA = ["block_key", "record_id"]
 
-
-def _kv(df: DataFrame, key: Column, prefix: str, id_col: str) -> DataFrame:
-    return (
-        df.select(F.concat(F.lit(prefix + ":"), key).alias("block_key"), F.col(id_col).alias("record_id"))
-        .where(F.col("block_key").isNotNull())
-    )
+# Followers each record pairs with in the sorted-neighborhood pass.
+SNB_WINDOW = 3
+# MinHash-LSH banding of the name 3-grams: bands x rows per band.
+MINHASH_BANDS = 4
+MINHASH_ROWS = 2
 
 
 def sorted_neighborhood_pairs(
     df: DataFrame,
     sort_cols: "list[str]",
     id_col: str = "record_id",
-    window_size: int = 3,
+    window_size: int = SNB_WINDOW,
     partition_expr: Column | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood blocking: sort by a composite key, pair each
@@ -174,8 +173,6 @@ def all_block_keys(
     first_col: str = "first_name",
     dob_col: str = "dob",
     ssn_col: str = "ssn_digits",
-    minhash_bands: int = 4,
-    minhash_rows: int = 2,
 ) -> DataFrame:
     """All non-MinHash passes in ONE narrow projection + one ``stack``
     unpivot (a single scan and a single metaphone-UDF evaluation); the
@@ -185,7 +182,8 @@ def all_block_keys(
     count must not multiply scans.
 
     Emits (block_key, record_id) for: soundex+year, double-metaphone
-    primary/secondary+year, SSN exact, and b MinHash band keys."""
+    primary/secondary+year, SSN exact, and ``MINHASH_BANDS`` MinHash
+    band keys."""
     year = F.coalesce(F.substring(F.col(dob_col), 1, 4), F.lit("x"))
     dm = double_metaphone_udf(F.col(last_col))
     name_text = F.concat_ws(
@@ -204,12 +202,13 @@ def all_block_keys(
         ),
         "ssn": F.when(F.length(ssn_col) == 9, F.concat(F.lit("ssn:"), F.col(ssn_col))),
         # Recall passes for the two dominant miss modes measured at 300k
-        # (tools/diag_blocking_recall.py, round 5): 55% of missed true
-        # pairs had last_name BLANKED/corrupted on one side with the
-        # full DOB intact (every key above needs last_name), and 31%
-        # had intact names but a null/noised DOB (the year salt above
-        # breaks every phonetic key). Neither mode is exotic — they are
-        # the leave_blank + wrong-digits noise channels doing their job.
+        # (tools/diag_blocking_recall.py, round 5; last present in
+        # commit b8e0934): 55% of missed true pairs had last_name
+        # BLANKED/corrupted on one side with the full DOB intact (every
+        # key above needs last_name), and 31% had intact names but a
+        # null/noised DOB (the year salt above breaks every phonetic
+        # key). Neither mode is exotic — they are the leave_blank +
+        # wrong-digits noise channels doing their job.
         "fnd": F.when(
             F.col(first_col).isNotNull() & (F.length(dob_col) == 8),
             F.concat(F.lit("fnd:"), F.soundex(F.upper(F.col(first_col))), F.lit("|"), F.col(dob_col)),
@@ -239,44 +238,34 @@ def all_block_keys(
     stack_expr = f"stack({len(names)}, " + ", ".join(f"{n}" for n in names) + ") AS block_key"
     out = keyed.selectExpr("record_id", "_sweep", stack_expr).where(F.col("block_key").isNotNull())
 
-    if minhash_bands:
-        mh_base = df.where(F.length(name_text) > 1).select(
-            F.col(id_col).alias("record_id"), name_text.alias("_nm")
-        )
-        sig_table = _minhash_sig_table(
-            mh_base, F.col("_nm"), "record_id", minhash_bands * minhash_rows, 1337
-        )
-        mh_keyed = sig_table.select(
-            "record_id",
-            *[
-                F.concat(
-                    F.lit(f"mh{b}:"),
-                    F.concat_ws(
-                        "_",
-                        *[
-                            _sig_str(F.col(f"c{b * minhash_rows + r}"))
-                            for r in range(minhash_rows)
-                        ],
-                    ),
-                ).alias(f"mh{b}")
-                for b in range(minhash_bands)
-            ],
-        )
-        mh_stack = (
-            f"stack({minhash_bands}, "
-            + ", ".join(f"mh{b}" for b in range(minhash_bands))
-            + ") AS block_key"
-        )
-        # MinHash bands are hash-uniform (never the Zipf head), so they
-        # skip the dob carry: _sweep NULL keeps the shingle-exploded
-        # shuffle narrow, and the sweep window's (_sweep, record_id)
-        # order degrades to plain record_id order within these blocks
-        # (a block's rows all come from one pass - keys are prefixed).
-        out = out.unionByName(
-            mh_keyed.selectExpr("record_id", mh_stack)
-            .select("record_id", F.lit(None).cast("string").alias("_sweep"), "block_key")
-        )
-    return out
+    mh_base = df.where(F.length(name_text) > 1).select(
+        F.col(id_col).alias("record_id"), name_text.alias("_nm")
+    )
+    sig_table = _minhash_sig_table(
+        mh_base, F.col("_nm"), "record_id", MINHASH_BANDS * MINHASH_ROWS, 1337
+    )
+    mh_keyed = sig_table.select(
+        "record_id",
+        *[
+            F.concat(
+                F.lit(f"mh{b}:"),
+                F.concat_ws(
+                    "_", *[_sig_str(F.col(f"c{b * MINHASH_ROWS + r}")) for r in range(MINHASH_ROWS)]
+                ),
+            ).alias(f"mh{b}")
+            for b in range(MINHASH_BANDS)
+        ],
+    )
+    mh_stack = f"stack({MINHASH_BANDS}, " + ", ".join(f"mh{b}" for b in range(MINHASH_BANDS)) + ") AS block_key"
+    # MinHash bands are hash-uniform (never the Zipf head), so they
+    # skip the dob carry: _sweep NULL keeps the shingle-exploded
+    # shuffle narrow, and the sweep window's (_sweep, record_id)
+    # order degrades to plain record_id order within these blocks
+    # (a block's rows all come from one pass - keys are prefixed).
+    return out.unionByName(
+        mh_keyed.selectExpr("record_id", mh_stack)
+        .select("record_id", F.lit(None).cast("string").alias("_sweep"), "block_key")
+    )
 
 
 def block_size_stats(blocks: DataFrame) -> DataFrame:

@@ -15,8 +15,9 @@ Driver responsibilities (SURVEY.md §4 #2):
     unchanged — one lightweight action per round, no expensive
     ``exceptAll``.
 
-Node ids are int64 (xxhash64 of record ids, collision odds ~n²/2⁶⁴;
-the id->record mapping is kept and re-joined at the end).
+Node ids are the pipeline's int64 record ids (pipeline._assign_int_ids:
+xxhash64 surrogates verified unique; the id->record mapping is kept and
+re-joined at the end).
 """
 
 from __future__ import annotations
@@ -126,26 +127,26 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
 LOCAL_FINISH_MAX_EDGES = 2_000_000
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 25,
-    checkpoint_every: int = 1,
-    local_finish_max_edges: int = LOCAL_FINISH_MAX_EDGES,
-) -> DataFrame:
+# Upper bound on driver round trips (two star-rounds each); the loop
+# converges in O(log^2 n) rounds, far below it at any real scale.
+MAX_ITERATIONS = 25
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges: (u:int64, v:int64) -> assignments (u:int64, component:int64).
 
     Alternates large-star / small-star until the edge set is a fixed
     point (a forest of depth-1 stars pointing at component minima).
-    When the active edge set drops under ``local_finish_max_edges`` the
-    remaining rounds are replaced by one driver-local union-find pass
-    (see :func:`_local_union_find`)."""
+    When the active edge set drops under ``LOCAL_FINISH_MAX_EDGES`` (read
+    at call time) the remaining rounds are replaced by one driver-local
+    union-find pass (see :func:`_local_union_find`)."""
     e = edges.select("u", "v").where(F.col("u") != F.col("v")).distinct().localCheckpoint()
     # size the iteration loop's partitioning by DATA, not core count:
     # ~250k edges per partition keeps tasks meaningful while bounding
     # the per-round task-launch overhead that otherwise dominates the
     # O(log n) loop (and makes wall time depend on executor count)
     n_edges = e.count()
-    if n_edges <= local_finish_max_edges:
+    if n_edges <= LOCAL_FINISH_MAX_EDGES:
         e = _local_union_find(e)
         assign = e.select(F.col("u"), F.col("v").alias("component"))
         roots = e.select(F.col("v").alias("u"), F.col("v").alias("component")).distinct()
@@ -159,45 +160,31 @@ def connected_components(
         e = e.repartition(parts).localCheckpoint()
     import concurrent.futures
 
-    # Speculative overlap only pays when rounds are expensive: on big
-    # edge sets the fingerprint of the PREVIOUS round runs concurrently
+    # The loop only runs above the local-finish cap, where rounds are
+    # expensive: the fingerprint of the PREVIOUS round runs concurrently
     # with the next round's materialization (one serial action per round
-    # instead of two); on tiny graphs the wasted speculative round after
-    # convergence costs more than it saves.
-    speculate = n_edges >= 100_000
+    # instead of two), at the price of one wasted round after
+    # convergence.
     prev_fp = None
     with concurrent.futures.ThreadPoolExecutor(max_workers=1) as pool:
-        for i in range(max_iterations):
+        for i in range(MAX_ITERATIONS):
             # two star-rounds per driver round-trip: halves the number
-            # of checkpoint+fingerprint jobs (the loop is task-launch-
-            # bound on small edge sets; extra converged rounds are
+            # of checkpoint+fingerprint jobs (extra converged rounds are
             # idempotent)
-            if speculate:
-                nxt = _small_star(_large_star(e))
-                nxt = _small_star(_large_star(nxt))
-                fp_future = pool.submit(_fingerprint, e) if i > 0 else None
-                nxt = nxt.localCheckpoint()
-                fp = fp_future.result() if fp_future is not None else None
-                if fp is not None and fp == prev_fp:
-                    break
-                prev_fp = fp
-                e = nxt
-                # star-rounds preserve connectivity, so once the active
-                # edge set is small a local union-find finish is exact
-                if fp is not None and fp[0] <= local_finish_max_edges:
-                    e = _local_union_find(e)
-                    break
-            else:
-                e = _small_star(_large_star(e))
-                e = _small_star(_large_star(e))
-                e = e.localCheckpoint()
-                fp = _fingerprint(e)
-                if fp == prev_fp:
-                    break
-                prev_fp = fp
-                if fp[0] <= local_finish_max_edges:
-                    e = _local_union_find(e)
-                    break
+            nxt = _small_star(_large_star(e))
+            nxt = _small_star(_large_star(nxt))
+            fp_future = pool.submit(_fingerprint, e) if i > 0 else None
+            nxt = nxt.localCheckpoint()
+            fp = fp_future.result() if fp_future is not None else None
+            if fp is not None and fp == prev_fp:
+                break
+            prev_fp = fp
+            e = nxt
+            # star-rounds preserve connectivity, so once the active
+            # edge set is small a local union-find finish is exact
+            if fp is not None and fp[0] <= LOCAL_FINISH_MAX_EDGES:
+                e = _local_union_find(e)
+                break
     # star edges now point node -> component min; include roots themselves
     assign = e.select(F.col("u"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("u"), F.col("v").alias("component")).distinct()
@@ -208,42 +195,17 @@ def cluster_records(
     edges_by_record: DataFrame,
     all_records: DataFrame,
     id_col: str = "record_id",
-    ids_unique: bool = True,
 ) -> DataFrame:
-    """(id_l, id_r) match edges -> (record_id, cluster_id) covering ALL
-    records (singletons keep their own hash as cluster id).
+    """(id_l, id_r) int64 match edges -> (record_id, cluster_id)
+    covering ALL records (singletons keep their own id as cluster id).
 
-    ``ids_unique=True`` (the pipeline's case: record_ids are unique by
-    construction — dataset-prefixed, guardian twins suffixed ``_dup``)
-    skips a full shuffle of the record set that a defensive
-    ``distinct`` would cost; pass False for inputs that may repeat
-    ids.
-
-    When the id column AND both edge endpoints are already int64 (the
-    rid pipeline, where _assign_int_ids VERIFIED uniqueness on the
-    materialized data) they are used as graph node ids directly —
-    re-hashing a verified-unique surrogate with a second xxhash64 would
-    put the clustering domain on an UNverified hash (a collision there
-    silently merges two records) and pay a wasted pass over the record
-    set. String-id callers keep the xxhash64 node mapping (collision
-    odds ~n²/2⁶⁴, documented above)."""
-    ids = all_records.select(F.col(id_col).alias("record_id"))
-    if not ids_unique:
-        ids = ids.distinct()
-    edge_types = dict(edges_by_record.dtypes)
-    all_long = (
-        dict(all_records.dtypes).get(id_col) == "bigint"
-        and edge_types.get("id_l") == "bigint"
-        and edge_types.get("id_r") == "bigint"
-    )
-    if all_long:
-        ids = ids.withColumn("u", F.col("record_id"))
-        edges = edges_by_record.select(F.col("id_l").alias("u"), F.col("id_r").alias("v"))
-    else:
-        ids = ids.withColumn("u", F.xxhash64("record_id"))
-        edges = edges_by_record.select(
-            F.xxhash64("id_l").alias("u"), F.xxhash64("id_r").alias("v")
-        )
+    Record ids are the pipeline's int64 rids, unique by construction
+    (_assign_int_ids VERIFIED it on the materialized data), so they are
+    the graph node ids directly: no defensive ``distinct`` over the
+    record set and no second hash, whose unverified collisions would
+    silently merge two records."""
+    ids = all_records.select(F.col(id_col).alias("record_id")).withColumn("u", F.col("record_id"))
+    edges = edges_by_record.select(F.col("id_l").alias("u"), F.col("id_r").alias("v"))
     comp = connected_components(edges)
     return (
         ids.join(comp, "u", "left")

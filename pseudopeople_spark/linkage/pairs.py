@@ -32,11 +32,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# Blocks up to this size emit all their pairs; larger ones are swept.
+MAX_BLOCK_SIZE = 100
+# Followers each record of an oversized block pairs with.
+NEIGHBORHOOD_WINDOW = 5
+
 
 def pairs_from_blocks(
     blocks: DataFrame,
-    max_block_size: int = 100,
-    neighborhood_window: int = 5,
+    max_block_size: int = MAX_BLOCK_SIZE,
+    neighborhood_window: int = NEIGHBORHOOD_WINDOW,
     dedup: bool = True,
 ) -> DataFrame:
     """blocks: (block_key, record_id) -> distinct (id_l, id_r).

@@ -24,6 +24,7 @@ Stage shuffle budget (the thing that matters at 10^12 docs):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,25 +39,16 @@ from pseudopeople_spark.linkage.metrics import pairwise_f1_on_candidates
 @dataclass
 class ResolveConfig:
     threshold: float = 0.92
+    checkpoint_dir: "str | None" = None
     # pseudopeople-style extracts carry each entity at most ONCE per
     # dataset-period (one census row per simulant per year), so a pair
     # WITHIN one dataset can only be a guardian-duplication twin
     # (record_id + "_dup") — every other same-dataset pair is a
-    # different entity by construction. Set False for dedup-style
-    # workloads where one source may repeat an entity.
-    unique_within_dataset: bool = True
-    max_block_size: int = 100
-    minhash_bands: int = 4
-    minhash_rows: int = 2
-    snb_window: int = 3
-    use_sorted_neighborhood: bool = True
-    use_minhash: bool = True
-    # split clusters whose transitive closure violates the
-    # dataset-period uniqueness invariant (linkage.refine): the FP mass
-    # at scale is same-household twins merged through a low-evidence
-    # bridge edge, and the violation is machine-detectable
-    refine_splits: bool = True
-    checkpoint_dir: "str | None" = None
+    # different entity by construction. The same invariant drives the
+    # split of clusters whose transitive closure violates it
+    # (linkage.refine): the FP mass at scale is same-household twins
+    # merged through a low-evidence bridge edge.
+    unique_within_dataset: ClassVar[bool] = True
 
 
 CANONICAL_FIELDS = ["dataset", "period", "first_name", "middle", "last_name",
@@ -205,9 +197,10 @@ def _assign_int_ids(records: DataFrame, id_col: str = "record_id", max_tries: in
     pre-dedup rows at the 300k-simulant bench) and every pair row
     carries two ids through the dedup exchange and two scoring joins.
     With string ids the dedup alone costs 157s at 8 pinned cores; with
-    int64 ids, 64s (tools/ab_pair_dedup.py) — hashing, comparison and
-    exchange bytes all shrink ~2.5x. At 10^12 records this is the
-    difference between shuffling ~32TB and ~13TB per full-width pass.
+    int64 ids, 64s (tools/ab_pair_dedup.py, last present in commit
+    b8e0934) — hashing, comparison and exchange bytes all shrink
+    ~2.5x. At 10^12 records this is the difference between shuffling
+    ~32TB and ~13TB per full-width pass.
 
     Exactness: the frame-with-rids is localCheckpointed FIRST and the
     verification aggregate runs on the MATERIALIZED data, so the
@@ -260,16 +253,6 @@ def _assign_int_ids(records: DataFrame, id_col: str = "record_id", max_tries: in
     raise RuntimeError(f"no collision-free xxhash64 salt in {max_tries} tries for {id_col}")
 
 
-def candidate_blocks(records: DataFrame, cfg: ResolveConfig) -> DataFrame:
-    """All blocking passes as (block_key, record_id) — one scan, one
-    UDF evaluation, one stack (see blocking.all_block_keys)."""
-    return blocking.all_block_keys(
-        records,
-        minhash_bands=cfg.minhash_bands if cfg.use_minhash else 0,
-        minhash_rows=cfg.minhash_rows,
-    )
-
-
 def resolve(
     spark: SparkSession,
     records: DataFrame,
@@ -304,7 +287,7 @@ def resolve(
     t0 = _time.time()
     mapping, records, n_records = _assign_int_ids(records)
     stage_seconds["normalize"] = round(_time.time() - t0, 2)
-    blocks = _timed("blocking", lambda: candidate_blocks(records, cfg))
+    blocks = _timed("blocking", lambda: blocking.all_block_keys(records))
 
     def _pair_partitions() -> int:
         """Size the candidate-pair exchange from the DATA, not the
@@ -326,29 +309,24 @@ def resolve(
             # always the case under get_spark, which sets the shuffle
             # width to the local core count
             return par
-        w = 5  # pairs_from_blocks neighborhood_window default
-        cap = cfg.max_block_size
         per_block = F.when(
-            F.col("c") <= cap, F.col("c") * (F.col("c") - 1) / 2
-        ).otherwise(F.col("c") * w)
+            F.col("c") <= pairgen.MAX_BLOCK_SIZE, F.col("c") * (F.col("c") - 1) / 2
+        ).otherwise(F.col("c") * pairgen.NEIGHBORHOOD_WINDOW)
         _t0 = _time.time()
         ub_row = (
             blocks.groupBy("block_key").agg(F.count("*").alias("c"))
             .agg(F.sum(per_block).alias("ub")).first()
         )
         _PROF["pairs.ub_agg"] = round(_time.time() - _t0, 2)
-        ub = int(ub_row["ub"] or 0)
-        if cfg.use_sorted_neighborhood:
-            ub += n_records * cfg.snb_window
+        ub = int(ub_row["ub"] or 0) + n_records * blocking.SNB_WINDOW
         return max(par, min(-(-ub // 250_000), n_shuffle))
 
     def _pairs() -> DataFrame:
-        p = pairgen.pairs_from_blocks(blocks, max_block_size=cfg.max_block_size, dedup=False)
-        if cfg.use_sorted_neighborhood:
-            snb = blocking.sorted_neighborhood_pairs(
-                records, ["last_name", "first_name", "dob"], window_size=cfg.snb_window
-            ).select("id_l", "id_r")
-            p = p.unionByName(snb)
+        p = pairgen.pairs_from_blocks(blocks, dedup=False)
+        snb = blocking.sorted_neighborhood_pairs(
+            records, ["last_name", "first_name", "dob"]
+        ).select("id_l", "id_r")
+        p = p.unionByName(snb)
         # ONE dedup shuffle for all pair sources, hash-partitioned on
         # id_l alone: HashPartitioning(id_l) satisfies the aggregate's
         # ClusteredDistribution([id_l, id_r]) (all copies of a pair share
@@ -416,9 +394,7 @@ def resolve(
         return scoring.prune_edges_by_ssn_consensus_local(pdf)[["id_l", "id_r", "score"]]
 
     def _assignments() -> DataFrame:
-        if not (cfg.refine_splits and cfg.unique_within_dataset):
-            asg = cluster_records(edges, records)
-        elif (e_pdf := _local_edges()) is not None:
+        if (e_pdf := _local_edges()) is not None:
             # Small-edge-set regime (same cap as the CC local finish):
             # ONE fused driver pass for CC + violation detection +
             # constrained rebuild on the edges just collected, plus one

@@ -153,7 +153,8 @@ def duplicate_rows(
     duplicate_with_guardian's ``_dup``): emitting two rows under ONE
     record_id would silently break every downstream key consumer — CRN
     draws would noise the twins identically, key joins would fan out,
-    and cluster_records(ids_unique=True) assumes unique ids."""
+    and resolve() refuses input that repeats a record_id
+    (linkage.pipeline._assign_int_ids)."""
     k = ident(key_col)
     base = df.withColumn(key_col, F.expr(f"CAST({k} AS STRING)"))  # deterministic output type
     dupes = base.where(f"{u01_sql(u01)(k, seed, 'duplicate_row')} < {double(p)}")

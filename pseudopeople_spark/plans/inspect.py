@@ -17,12 +17,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    return df._sc._jvm.org.apache.spark.sql.execution.ExplainUtils.processPlan(  # pragma: no cover
-        df._jdf.queryExecution().executedPlan(), None
-    )
-
-
 def assert_pushed_filters(df: DataFrame, *fragments: str) -> None:
     """Assert the scan carries pushed filters mentioning each fragment."""
     plan = physical_plan(df)

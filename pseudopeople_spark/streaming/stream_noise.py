@@ -6,9 +6,6 @@ operator chain runs unchanged on a stream: ``readStream`` over a
 dataset directory (or Kafka source at deployment), the noise projection
 per micro-batch, ``writeStream`` to the sink. Determinism carries over:
 a record gets the same noise whether it arrives in a batch or a stream.
-
-Also provides a watermarked streaming aggregation helper used by the
-``streaming_window_agg`` query.
 """
 
 from __future__ import annotations
@@ -16,7 +13,6 @@ from __future__ import annotations
 from typing import Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from pseudopeople_spark import datasets as D
 from pseudopeople_spark.noise import noise_dataset
@@ -55,14 +51,3 @@ def noise_stream(
     cfg[spec.name] = ds_cfg
     return noise_dataset(stream, spec, cfg, seed=seed, key_col=key_col)
 
-
-def windowed_event_counts(
-    events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation over a streaming events
-    table (late data handled by the watermark)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total"))
-    )

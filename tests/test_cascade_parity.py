@@ -7,11 +7,12 @@ changes the edge set. Parity is checked on an adversarial randomized
 grid (seeded): records drawn from value pools dense in the cascade's
 boundary cases — nulls, empty strings, 1/2/5-digit-apart SSNs, 7-digit
 truncations, swapped dobs, insane byears, same dataset-period slots,
-dup twins — paired ~quadratically. The reference side computes the
-sims once in-process (scoring._make_sim_engine, the worker's own
-engine) and runs the JVM cascade over them; the decide side runs
-score_pairs_fused through both field sources, the per-worker lookup
-and attach_pair_fields' join. Both sides see the SAME sims, so any
+dup twins — paired ~quadratically, plus explicit boundary pairs
+(BOUNDARY_RECORDS) that the random grid does not reach. The reference
+side computes the sims once in-process (scoring._make_sim_engine, the
+worker's own engine) and runs the JVM cascade over them; the decide
+side runs score_pairs_fused through both field sources, the per-worker
+lookup and attach_pair_fields' join. Both sides see the SAME sims, so any
 mismatch is the cascade translation itself, not float drift.
 
 test_resolve_join_and_lookup_same_edges then runs resolve() end to end
@@ -36,7 +37,28 @@ _REC_FIELDS = ["dataset", "period", "first_name", "middle", "last_name", "dob", 
                "ssn_digits", "zipcode", "city", "sex", "base_rid"]
 
 
-def _pool_records(n=400, seed=7):
+N_RANDOM = 400
+
+# Explicit boundary rows after the random pool, paired as BOUNDARY_PAIRS.
+# No pair matches, and each would if one threshold moved: MILES / BILL and
+# MARIE / MYRA have an engine first-name sim of 0.633 (the veto is
+# jf < 0.65; raw JW is not the engine's sim — WILMA / BILL is 0.633 raw
+# but a nickname-family 0.93), and 123456000 is 3 edits from 123456789
+# (ssn_near is lev <= 2).
+BOUNDARY_RECORDS = [
+    # id, dataset, period, first, middle, last, dob, byear, ssn, zip, city, sex, base_rid
+    (400, "census", "2020", "MILES", None, "SMITH", "19800102", "1980", "123456789", None, None, None, 400),
+    (401, "w2", "2020", "BILL", None, "SMITH", "19800102", "1980", "123456789", None, None, None, 401),
+    (402, "census", "2020", "MARIE", None, "LEE", "19840312", "1984", "987654321", None, None, None, 402),
+    (403, "ssa", "creation", "MYRA", None, "LEE", "19840312", "1984", "987654321", None, None, None, 403),
+    (404, "census", "2020", "MARY", None, None, None, None, "123456000", None, None, None, 404),
+    (405, "w2", "2020", "MARY", None, None, None, None, "123456789", None, None, None, 405),
+]
+BOUNDARY_PAIRS = [(400, 401), (402, 403), (404, 405)]
+N_RECORDS = N_RANDOM + len(BOUNDARY_RECORDS)
+
+
+def _pool_records(n=N_RANDOM, seed=7):
     rng = random.Random(seed)
     firsts = [None, "", "WILLIAM", "BILL", "WILLIA", "MARY", "MARIE", "M", "JOSÉ", "JOSE"]
     lasts = [None, "", "SMITH", "SMYTH", "SMITHE", "GARCÍA", "GARCIA", "LEE"]
@@ -69,10 +91,10 @@ def _pool_records(n=400, seed=7):
                 i if rng.random() > 0.1 else max(0, i - 1),
             )
         )
-    return rows
+    return rows + BOUNDARY_RECORDS
 
 
-def _pairs(n_records, k=6000, seed=11):
+def _pairs(n_records=N_RANDOM, k=6000, seed=11):
     rng = random.Random(seed)
     seen = set()
     out = []
@@ -82,7 +104,7 @@ def _pairs(n_records, k=6000, seed=11):
             continue
         seen.add((a, b))
         out.append((a, b))
-    return out
+    return out + BOUNDARY_PAIRS
 
 
 def _match_set(df):
@@ -100,7 +122,7 @@ def grid(spark):
         "middle string, last_name string, dob string, byear string, "
         "ssn_digits string, zipcode string, city string, sex string, base_rid long",
     ).localCheckpoint()
-    pairs = spark.createDataFrame(_pairs(400), "id_l long, id_r long").localCheckpoint()
+    pairs = spark.createDataFrame(_pairs(), "id_l long, id_r long").localCheckpoint()
     return recs, pairs
 
 
@@ -108,7 +130,7 @@ def grid(spark):
 def reference_scored(spark):
     """The grid pairs with both records' fields and the engine's sims +
     score, computed once in-process, as a frame for the JVM cascade."""
-    recs, pairs = _pool_records(), _pairs(400)
+    recs, pairs = _pool_records(), _pairs()
     col = {}
     for j, f in enumerate(_REC_FIELDS, start=1):
         typ = pa.int64() if f == "base_rid" else pa.string()
@@ -136,7 +158,7 @@ def test_cascade_parity_on_adversarial_grid(spark, grid, reference_scored, same_
 
     def decided():
         return _match_set(
-            scoring.score_pairs_fused(spark, pairs, recs, ATTACH, decide=decide, n_records=400)
+            scoring.score_pairs_fused(spark, pairs, recs, ATTACH, decide=decide, n_records=N_RECORDS)
         )
 
     assert ref and decided() == ref  # per-worker lookup

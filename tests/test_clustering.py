@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from pseudopeople_spark.linkage import clustering
 from pseudopeople_spark.linkage.clustering import cluster_records, connected_components
 
 
@@ -46,16 +47,14 @@ def test_cc_large_random_union(spark):
 
 
 def test_cluster_records_covers_singletons(spark):
-    recs = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], ["record_id"])
-    edges = spark.createDataFrame([("a", "b")], ["id_l", "id_r"])
+    recs = spark.createDataFrame([(1,), (2,), (3,), (4,)], "record_id long")
+    edges = spark.createDataFrame([(1, 2)], "id_l long, id_r long")
     out = cluster_records(edges, recs)
     rows = {r["record_id"]: r["cluster_id"] for r in out.collect()}
-    assert len(rows) == 4
-    assert rows["a"] == rows["b"]
-    assert len({rows["a"], rows["c"], rows["d"]}) == 3
+    assert rows == {1: 1, 2: 1, 3: 3, 4: 4}
 
 
-def test_local_finish_matches_distributed(spark):
+def test_local_finish_matches_distributed(spark, monkeypatch):
     """The capped driver-local union-find finish must produce EXACTLY
     the distributed fixed point (same min-id component labels) on a
     graph with chains, stars, merges, and singletons-in-edges."""
@@ -67,11 +66,12 @@ def test_local_finish_matches_distributed(spark):
     edges += [(5, 105), (205, 305)]  # cross-chain merges
     df = spark.createDataFrame(edges, ["u", "v"])
     local = connected_components(df).collect()  # cap >> edge count -> local path
-    dist = connected_components(df, local_finish_max_edges=0).collect()  # forced distributed
+    monkeypatch.setattr(clustering, "LOCAL_FINISH_MAX_EDGES", 0)  # forced distributed
+    dist = connected_components(df).collect()
     assert {(r["u"], r["component"]) for r in local} == {(r["u"], r["component"]) for r in dist}
 
 
-def test_mid_loop_local_cutover_matches(spark):
+def test_mid_loop_local_cutover_matches(spark, monkeypatch):
     """Cutover AFTER some distributed rounds (cap between initial and
     converged edge count) is exact too: star-rounds preserve
     connectivity so union-find on an intermediate edge set gives the
@@ -82,6 +82,8 @@ def test_mid_loop_local_cutover_matches(spark):
     edges = [(i, i + 1) for i in range(3000) if (i + 1) % 30 != 0]
     edges += [(i, i + 2) for i in range(3000) if (i % 30) < 28]
     df = spark.createDataFrame(edges, ["u", "v"])
-    want = connected_components(df, local_finish_max_edges=0).collect()
-    got = connected_components(df, local_finish_max_edges=4000).collect()
+    monkeypatch.setattr(clustering, "LOCAL_FINISH_MAX_EDGES", 0)
+    want = connected_components(df).collect()
+    monkeypatch.setattr(clustering, "LOCAL_FINISH_MAX_EDGES", 4000)
+    got = connected_components(df).collect()
     assert {(r["u"], r["component"]) for r in got} == {(r["u"], r["component"]) for r in want}

@@ -1,12 +1,28 @@
-"""Dedup + ANN operator tests: SimHash properties, IVF recall vs the
-brute-force baseline, streaming noising."""
+"""Dedup operator tests: SimHash properties of the portable SQL the
+``simhash_near_dups`` query runs, the char-Jaccard block cap, streaming
+noising and streaming dedup."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from pseudopeople_spark.functions.ann import ivf_topk
-from pseudopeople_spark.functions.textdedup import simhash64_udf, simhash_near_dups
+from pseudopeople_spark.functions import portable as PT
 
 SF = "/root/testdata/sf0.001"
+
+
+def _simhash_sigs(spark, docs, view):
+    """(doc_id, sig) of ``docs`` through the production signature SQL,
+    materialized and registered as ``view``."""
+    docs.createOrReplaceTempView("documents")
+    sigs = spark.sql(PT.simhash_sigs_relation_sql(PT.SPARK)).localCheckpoint()
+    sigs.createOrReplaceTempView(view)
+    return sigs
+
+
+def _simhash_pairs(spark, view, max_hamming):
+    """The (id_l, id_r, hamming) rows the Spark query path emits."""
+    sql = PT.simhash_pairs_from_sigs_sql(PT.SPARK, view, max_hamming=max_hamming, first_band_only=True)
+    return {(r["id_l"], r["id_r"], r["hamming"]) for r in spark.sql(sql).collect()}
 
 
 def test_simhash_identical_and_near_texts(spark):
@@ -19,35 +35,14 @@ def test_simhash_identical_and_near_texts(spark):
         ],
         ["doc_id", "text"],
     )
-    sigs = {r["doc_id"]: r["s"] for r in df.select("doc_id", simhash64_udf("text").alias("s")).collect()}
+    sigs = {r["doc_id"]: r["sig"] for r in _simhash_sigs(spark, df, "_sigs_near_test").collect()}
     assert sigs[1] == sigs[2]
-    ham = lambda a, b: bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1")
+    ham = lambda a, b: bin(sigs[a] ^ sigs[b]).count("1")
     assert ham(1, 3) < ham(1, 4)
 
-    pairs = simhash_near_dups(df, max_hamming=10)
-    got = {(r["id_l"], r["id_r"]) for r in pairs.collect()}
-    assert (1, 2) in got
+    got = {(l, r) for l, r, _ in _simhash_pairs(spark, "_sigs_near_test", max_hamming=ham(1, 3))}
+    assert (1, 2) in got and (1, 3) in got
     assert (1, 4) not in got
-
-
-def test_ivf_topk_recall_vs_brute_force(spark):
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = e.where(F.col("vec_id") < 5)
-    ivf = ivf_topk(e, q, k=10, n_buckets=8, nprobe=8)  # nprobe = all buckets -> exact
-    got = {(r["qid"], r["cid"]) for r in ivf.collect()}
-    # brute force reference
-    import __spark_entry__ as E
-
-    exact = {(r["qid"], r["cid"]) for r in E.queries()["ann_cosine_topk"](spark, SF).collect()}
-    # probing every bucket must reproduce the exact top-k (modulo ties
-    # at the rounded-sim boundary)
-    overlap = len(got & exact) / len(exact)
-    assert overlap >= 0.9, overlap
-
-    # partial probe keeps good recall at a fraction of the candidates
-    ivf2 = ivf_topk(e, q, k=10, n_buckets=8, nprobe=3)
-    got2 = {(r["qid"], r["cid"]) for r in ivf2.collect()}
-    assert len(got2 & exact) / len(exact) >= 0.6
 
 
 def test_streaming_noise_matches_batch(spark, tmp_path):
@@ -87,53 +82,38 @@ def test_streaming_noise_matches_batch(spark, tmp_path):
     assert batch.exceptAll(streamed).count() == 0
 
 
-def test_simhash_banding_recall_guarantee(spark):
-    """Pigeonhole completeness: with uncapped buckets, EVERY pair within
-    max_hamming must be found — verified against a brute-force cross
-    join of the signatures (the round-1 fixed-4-band version lost pairs
-    at Hamming 4-6)."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", F.substring("text", 1, 120).alias("text")
-    ).limit(200)
-    for h in (3, 6):
-        pairs = simhash_near_dups(docs, max_hamming=h, max_bucket_size=None)
-        got = {(r["id_l"], r["id_r"]) for r in pairs.collect()}
-        sigs = docs.select("doc_id", simhash64_udf("text").alias("s"))
-        l, r = sigs.alias("l"), sigs.alias("r")
-        brute = (
-            l.crossJoin(r)
-            .where(F.col("l.doc_id") < F.col("r.doc_id"))
-            .where(F.bit_count(F.col("l.s").bitwiseXOR(F.col("r.s"))) <= h)
-            .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
+@pytest.mark.parametrize("h", [0, 3, 6])
+def test_simhash_banding_recall_guarantee(spark, h):
+    """Pigeonhole completeness of the production banding: with
+    ``h + 1`` bands, EVERY pair within Hamming ``h`` must be emitted,
+    with its exact distance — checked against a brute-force cross join
+    of the signatures. The DuckDB oracle replays the same banding, so
+    it would share a recall hole rather than catch it. Three exact
+    copies make the h=0 case (one 30-bit band, the whole signature as
+    the key) non-empty."""
+    docs = (
+        spark.read.parquet(f"{SF}/documents.parquet")
+        .select("doc_id", F.substring("text", 1, 120).alias("text"))
+        .orderBy("doc_id")
+        .limit(200)
+    )
+    copies = docs.where(F.col("doc_id") < 3).withColumn("doc_id", F.col("doc_id") + 1_000_000)
+    sigs = _simhash_sigs(spark, docs.unionByName(copies), "_sigs_recall_test")
+    l, r = sigs.alias("l"), sigs.alias("r")
+    brute = (
+        l.crossJoin(r)
+        .where(F.col("l.doc_id") < F.col("r.doc_id"))
+        .select(
+            F.col("l.doc_id").alias("a"),
+            F.col("r.doc_id").alias("b"),
+            F.bit_count(F.col("l.sig").bitwiseXOR(F.col("r.sig"))).alias("d"),
         )
-        want = {(r["a"], r["b"]) for r in brute.collect()}
-        assert got == want, f"h={h}: missed {len(want - got)}, extra {len(got - want)}"
-
-
-def test_simhash_bucket_cap_linearizes_hot_buckets(spark):
-    """A degenerate corpus (every doc identical -> one band bucket)
-    must produce O(n * window) pairs under the cap, not n^2/2."""
-    n = 400
-    docs = spark.range(n).select(
-        F.col("id").alias("doc_id"), F.lit("same same same text").alias("text")
+        .where(F.col("d") <= h)
     )
-    capped = simhash_near_dups(docs, max_hamming=3, max_bucket_size=50).count()
-    assert capped <= n * 3 * 4  # <= window(3) x bands(4) per doc
-    uncapped = simhash_near_dups(docs, max_hamming=3, max_bucket_size=None).count()
-    assert uncapped == n * (n - 1) // 2
-
-
-def test_simhash_max_hamming_zero_exact_dupes(spark):
-    """max_hamming=0 (bands=1, band width 64) is the exact-signature
-    dedup degenerate case — the band key is the full signature and must
-    not overflow a long literal (1 << 64)."""
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "totally different text here")],
-        "doc_id long, text string",
-    )
-    pairs = simhash_near_dups(docs, max_hamming=0, max_bucket_size=None).collect()
-    assert {(r["id_l"], r["id_r"]) for r in pairs} == {(1, 2)}
-    assert all(r["hamming"] == 0 for r in pairs)
+    want = {(x["a"], x["b"], x["d"]) for x in brute.collect()}
+    got = _simhash_pairs(spark, "_sigs_recall_test", max_hamming=h)
+    assert len(want) >= 3
+    assert got == want, f"h={h}: missed {len(want - got)}, extra {len(got - want)}"
 
 
 def test_dedup_char_jaccard_block_cap(spark, tmp_path):
@@ -155,20 +135,6 @@ def test_dedup_char_jaccard_block_cap(spark, tmp_path):
     out = E.queries()["dedup_char_jaccard"](spark, sf)
     cnt = out.count()
     assert 0 < cnt <= n * 8, f"expected <= n*sweep_window pairs, got {cnt}"
-
-
-def test_ivf_centroids_partition_invariant(spark):
-    """Deterministic (hash-sampled, id-ordered) training: identical
-    centroids at 2 vs 29 partitions — the fix for the round-1
-    nondeterministic limit() sample."""
-    import numpy as np
-
-    from pseudopeople_spark.functions.ann import train_ivf_centroids
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    c1 = train_ivf_centroids(e.repartition(2), k=8, sample_limit=300, seed=7)
-    c2 = train_ivf_centroids(e.repartition(29), k=8, sample_limit=300, seed=7)
-    assert np.array_equal(c1, c2)
 
 
 def test_streaming_stateful_dedup_first_seen(spark, tmp_path):

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pseudopeople_spark import config, datasets as D, noise, synth
+from pseudopeople_spark.linkage import clustering
 from pseudopeople_spark.linkage.metrics import blocking_recall
 from pseudopeople_spark.linkage.pipeline import ResolveConfig, normalize_records, resolve
 from pseudopeople_spark.spans import decode_records, encode_records, span_sequence_signature
@@ -107,6 +108,19 @@ def test_resolve_is_partitioning_invariant(spark, linkage_input, resolved):
         spark.conf.set(key, old)
     assert got == (_checksum(resolved["pairs"], ["id_l", "id_r"]),
                    _checksum(resolved["assignments"], ["record_id", "cluster_id"]))
+
+
+def test_distributed_clustering_matches_local(spark, linkage_input, resolved, monkeypatch):
+    """With the local-finish cap at 0, clustering takes the branch built
+    for match-edge sets too big for the driver: distributed refinement
+    over the star-round connected components. Its assignments must equal
+    the driver-local finish's, record for record."""
+    records, _ = linkage_input
+    monkeypatch.setattr(clustering, "LOCAL_FINISH_MAX_EDGES", 0)
+    dist = resolve(spark, records, ResolveConfig())
+    assert _checksum(dist["assignments"], ["record_id", "cluster_id"]) == _checksum(
+        resolved["assignments"], ["record_id", "cluster_id"]
+    )
 
 
 # Spark jobs one warm resolve() of the fixture issues (measured: 18 at

@@ -1,15 +1,17 @@
-"""No switches in the linkage package: resolve() has one scoring path,
-so no module under pseudopeople_spark/linkage/ may read the process
-environment. The one exception is PP_FUSED_LOOKUP_DIR, a deployment
-path (where the scratch lookup table is written), not a behaviour
-switch."""
+"""No switches in the linkage package: resolve() has one code path, so
+no module under pseudopeople_spark/linkage/ may read the process
+environment and ResolveConfig carries no option that picks a path. The
+one environment exception is PP_FUSED_LOOKUP_DIR, a deployment path
+(where the scratch lookup table is written), not a behaviour switch."""
 
 from __future__ import annotations
 
 import ast
+import dataclasses
 import pathlib
 
 import pseudopeople_spark.linkage as linkage
+from pseudopeople_spark.linkage.pipeline import ResolveConfig
 
 ALLOWED = {"PP_FUSED_LOOKUP_DIR"}
 
@@ -48,3 +50,9 @@ def test_linkage_modules_read_no_environment_switch():
         if key not in ALLOWED
     ]
     assert found == []
+
+
+def test_resolve_config_has_only_threshold_and_checkpoint_dir():
+    """resolve() runs one fixed pipeline: the match threshold and where
+    stage checkpoints go are its only settings."""
+    assert [f.name for f in dataclasses.fields(ResolveConfig)] == ["threshold", "checkpoint_dir"]

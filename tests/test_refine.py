@@ -172,7 +172,7 @@ def test_local_fused_path_without_edges(spark):
 
 
 def test_resolve_end_to_end_has_no_violations(spark):
-    """After resolve() with refine_splits on, NO cluster may hold two
+    """After resolve() (which always refines), NO cluster may hold two
     base_rids in one (dataset, period) slot."""
     from pseudopeople_spark import config, datasets as D, noise, synth
     from pseudopeople_spark.linkage.pipeline import ResolveConfig, normalize_records, resolve

@@ -49,9 +49,7 @@ def _pairs_path(n: int) -> str:
 
 def prepare(n: int) -> None:
     from pseudopeople_spark.linkage import blocking, pairs as pairgen
-    from pseudopeople_spark.linkage.pipeline import (
-        ResolveConfig, _assign_int_ids, candidate_blocks,
-    )
+    from pseudopeople_spark.linkage.pipeline import _assign_int_ids
     from pseudopeople_spark.session import get_spark
 
     raw = os.path.join(INPUT_DIR, f"records_{n}")
@@ -59,16 +57,15 @@ def prepare(n: int) -> None:
         from tools.bench_scaling import prepare as prep_raw
 
         prep_raw(n)
-    cfg = ResolveConfig()
     spark = get_spark("profile_prepare", master="local[16]", shuffle_partitions=64)
     records = spark.read.parquet(raw)
     _mapping, records, n_records = _assign_int_ids(records)
     records.write.mode("overwrite").parquet(_records_path(n))
     records = spark.read.parquet(_records_path(n))
-    blocks = candidate_blocks(records, cfg)
-    p = pairgen.pairs_from_blocks(blocks, max_block_size=cfg.max_block_size, dedup=False)
+    blocks = blocking.all_block_keys(records)
+    p = pairgen.pairs_from_blocks(blocks, dedup=False)
     snb = blocking.sorted_neighborhood_pairs(
-        records, ["last_name", "first_name", "dob"], window_size=cfg.snb_window
+        records, ["last_name", "first_name", "dob"]
     ).select("id_l", "id_r")
     p = p.unionByName(snb).repartition(64, "id_l").dropDuplicates(["id_l", "id_r"])
     p.write.mode("overwrite").parquet(_pairs_path(n))
